@@ -4,25 +4,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.locality.wait", "0")
-      .config("spark.ui.enabled", "false")
-      // The default whole-stage-codegen compile cache (100 entries,
-      // spark.sql.codegen.cache.maxEntries) thrashes under a
-      // 177-query suite: most stages re-Janino-compile INSIDE their
-      // first task while the stage's other tasks block on the cache
-      // entry — measured ~400 ms per task at ~20-40% CPU, uniformly,
-      // and q_containment_indexed's warm executor time dropped 93 s →
-      // 42 s when the cache fits. Static conf, JVM-wide; a
-      // production driver running a query catalog wants the same.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel(sys.env.getOrElse("SPARK_GRAFT_LOGLEVEL", "WARN"))
+    val cpus = GraftSession.defaultCpus
+    val spark = GraftSession.local(cpus)
+    sys.env.get("SPARK_GRAFT_LOGLEVEL").foreach(spark.sparkContext.setLogLevel)
     // Untimed session warmup (executor pools, codegen plumbing, parquet
     // footers) — otherwise the first timed query absorbs several seconds
     // of one-off JVM cost (observed: the hash-order-first query

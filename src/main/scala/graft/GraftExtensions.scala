@@ -7,7 +7,8 @@ import org.apache.spark.sql.graftshims.{DotProduct, Hash28Array, L2Norm}
 
 /** Library entry point for Spark's extension mechanism — install with
   * `spark.sql.extensions=graft.GraftExtensions` (or
-  * `SparkSession.builder.withExtensions(new GraftExtensions)`):
+  * a session builder's `withExtensions(new GraftExtensions)`, or
+  * `GraftSession.local(extensions = new GraftExtensions)`):
   *
   *  - SQL functions `vec_dot` / `vec_l2norm` (native codegen'd vector
   *    kernels, see [[graft.functions.VectorExpressions]]);

@@ -86,7 +86,7 @@ object BloomIndex {
 
   private def perFileItems(snap: Snapshot, expected: Long): Long =
     if (expected > 0) expected
-    else Option(snap.addsFlat.agg(max(col("num_records"))).head.get(0))
+    else Option(snap.addsFlat.agg(max(col("num_records"))).head().get(0))
       .map(_.asInstanceOf[Long]).filter(_ > 0).getOrElse(1L << 20)
 
   /** ONE distributed scan of `files` → (file_path, n_rows, bloom,
@@ -271,7 +271,7 @@ object BloomIndex {
       if (probes.size <= 256)
         log.spark.range(1)
           .select(probes.map(v => xxhash64(lit(v).cast(dt))): _*)
-          .head.toSeq.map(_.asInstanceOf[Long]).distinct
+          .head().toSeq.map(_.asInstanceOf[Long]).distinct
       else {
         // Same coercion semantics as the small path's lit(v).cast(dt),
         // just through a local relation: numeric widening for the

@@ -239,7 +239,7 @@ object ChangeDataFeed {
       scan: DataFrame, replacement: DataFrame): Seq[CdcAction] =
     if (!enabled(snap)) Nil
     else {
-      val aligned = replacement.select(scan.columns.map(col): _*)
+      val aligned = replacement.select(scan.columns.map(col).toSeq: _*)
       writeCdcFiles(log, deleteChanges(scan.exceptAll(aligned)))
     }
 

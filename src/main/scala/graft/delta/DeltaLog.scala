@@ -27,8 +27,8 @@ class DeltaLog(val spark: SparkSession, val tablePath: String) {
   val logPath = new Path(rootPath, "_delta_log")
   /** Cached per instance: `newHadoopConf()` copies the whole session
     * conf on EVERY call, and the commit/replay paths consult `fs`
-    * dozens of times per operation (round-14 JobTrace sampled it on
-    * the matview refresh main thread). FileSystem.get already caches
+    * dozens of times per operation (a round-14 stack sample found it
+    * on the matview refresh main thread). FileSystem.get already caches
     * by scheme/authority, so holding the resolved handle changes
     * nothing about which filesystem is used; a DeltaLog instance is
     * short-lived (one `forPath` per operation), so a session hadoop

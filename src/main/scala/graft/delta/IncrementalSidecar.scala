@@ -223,7 +223,7 @@ object IncrementalSidecar {
     * [[remapGroups]] (every coverable file present at that version is
     * covered by the maintenance contract). */
   def maxStoredVersion(entries: DataFrame): Long =
-    Option(entries.agg(max(col("version"))).head.get(0))
+    Option(entries.agg(max(col("version"))).head().get(0))
       .map(_.asInstanceOf[Long]).getOrElse(-1L)
 
   /** The planning pair every refresh/search starts from: the distinct

@@ -259,11 +259,11 @@ object IvfIndex {
           require(v >= 0.0, s"driftThreshold must be >= 0, got $v")
           v
         }
-        val newAvg = Option(e.agg(avg("asim")).head.get(0))
+        val newAvg = Option(e.agg(avg("asim")).head().get(0))
           .map(_.asInstanceOf[Double])
         val oldAvg = Option(
           idx.where(col("file_path") =!= CentroidsMarker)
-            .agg(avg("asim")).head.get(0))
+            .agg(avg("asim")).head().get(0))
           .map(_.asInstanceOf[Double])
         (oldAvg, newAvg) match {
           case (Some(o), Some(nw)) if o - nw > threshold =>

@@ -1488,7 +1488,7 @@ object Maintenance {
       n.isNotNull && (n < lit(mn) || n > lit(mx))
     }.reduce(_ || _)
     val drift = Option(
-      df.agg(avg(when(oob, 1.0).otherwise(0.0))).head.get(0))
+      df.agg(avg(when(oob, 1.0).otherwise(0.0))).head().get(0))
       .map(_.asInstanceOf[Double]).getOrElse(0.0)
     val threshold = {
       val conf =

@@ -51,18 +51,6 @@ object MatView {
   private[delta] val StateDomain = "graft.matview.state"
   private val TxnApp = "graft.matview"
 
-  /** Phase timing for refresh internals, printed when the session conf
-    * `spark.graft.debug.refreshTiming` is true — the hook
-    * [[graft.tools.MvJoinProfile]] uses to attribute a refresh's cost
-    * to its stages (CDF window read, delta materialization, merge). */
-  private def timed[A](spark: SparkSession, label: String)(f: => A): A =
-    if (!spark.conf.get("spark.graft.debug.refreshTiming", "false").toBoolean) f
-    else {
-      val t0 = System.nanoTime(); val r = f
-      println(f"[matview]   $label%-20s ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-
   /** One aggregate clause: (fn ∈ sum|min|max|avg, source column). The
     * view column is named `<fn>_<col>`. AVG is stored as the ratio of
     * an exact aggregate pair (sum ÷ count, one double division) so the
@@ -529,31 +517,27 @@ object MatView {
       // MERGE references its source in several sub-joins, and the
       // delta chain above it (CDF window ranks + two fact/dim joins)
       // would otherwise recompute per reference
-      val src = timed(spark, "delta materialize") {
-        touched.join(
-          upserts.withColumn("__live", lit(1)),
-          factPk, "left").localCheckpoint()
-      }
+      val src = touched.join(
+        upserts.withColumn("__live", lit(1)),
+        factPk, "left").localCheckpoint()
       val cond = factPk.map(k => col(s"t.$k") === col(s"s.$k")).reduce(_ && _)
       // both advanced watermarks ride INSIDE the merge commit — the
       // refresh is ONE commit and watermark/data are atomic (the
       // absolute-row apply was already replay-idempotent; this removes
       // the separate domain commit and its cost)
-      timed(spark, "merge apply") {
-        // src is one row per fact PK by construction (touched is
-        // distinct, upserts dropDuplicates the PK) — guard skipped
-        Merge.into(viewLog, src, cond).withUniqueSource()
-          .withDomain(StateDomain,
-            s"""{"factVersion":$nf,"dimVersion":$nd}""")
-          .whenMatchedDelete(Some(col(s"s.__live").isNull))
-          .whenMatchedUpdate(
-            viewCols.map(c => c -> col(s"s.$c")).toMap,
-            Some(col(s"s.__live").isNotNull))
-          .whenNotMatchedInsert(
-            viewCols.map(c => c -> col(s"s.$c")).toMap,
-            Some(col(s"s.__live").isNotNull))
-          .execute()
-      }
+      // src is one row per fact PK by construction (touched is
+      // distinct, upserts dropDuplicates the PK) — guard skipped
+      Merge.into(viewLog, src, cond).withUniqueSource()
+        .withDomain(StateDomain,
+          s"""{"factVersion":$nf,"dimVersion":$nd}""")
+        .whenMatchedDelete(Some(col(s"s.__live").isNull))
+        .whenMatchedUpdate(
+          viewCols.map(c => c -> col(s"s.$c")).toMap,
+          Some(col(s"s.__live").isNotNull))
+        .whenNotMatchedInsert(
+          viewCols.map(c => c -> col(s"s.$c")).toMap,
+          Some(col(s"s.__live").isNotNull))
+        .execute()
     }
     nf
   }

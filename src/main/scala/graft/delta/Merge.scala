@@ -199,7 +199,6 @@ final case class Merge(
     val updCondJ = matchedUpdate.map { case (c, _) =>
       !delCondJ && coalesce(c.getOrElse(lit(true)), lit(false))
     }.getOrElse(lit(false))
-    val dbgSpark = log.spark
     val insertOnly = matchedDelete.isEmpty && matchedUpdate.isEmpty
     val dvCandidate = !hasBySource && !insertOnly && Merge.dvEnabled(snap)
     // Small-table shortcut: touched-file DISCOVERY exists to avoid
@@ -254,11 +253,10 @@ final case class Merge(
       if (hasBySource) planned // every file may hold unmatched rows
       else if (insertOnly) Nil
       else matchesOpt match {
-        case Some(matches) => Debug.timed(dbgSpark, "merge discovery") {
+        case Some(matches) =>
           matches.select(col("__file")).distinct().collect()
             .map(r => Mutations.normalize(r.getString(0)))
             .flatMap(idx.get).toSeq
-        }
         case None =>
           // shortcut path: rewrite every (few) file — UNLESS the source
           // is empty, where the rewrite must not churn the log (a

@@ -403,7 +403,8 @@ object Mutations {
         // pre = the CURRENT rows being closed; post = their closed
         // versions (exact diff over touched files); inserts as inserts.
         // exceptAll is positional — realign to the scan's column order.
-        val closedAligned = closedTouched.select(touchedScan.columns.map(col): _*)
+        val closedAligned = closedTouched.select(
+          touchedScan.columns.map(col).toSeq: _*)
         val pre = touchedScan.exceptAll(closedAligned)
         val post = closedAligned.exceptAll(touchedScan)
         ChangeDataFeed.writeCdcFiles(log,

@@ -317,11 +317,11 @@ object PqIndex {
           require(v >= 0.0, s"driftThreshold must be >= 0, got $v")
           v
         }
-        val newAvg = Option(e.agg(avg("qerr")).head.get(0))
+        val newAvg = Option(e.agg(avg("qerr")).head().get(0))
           .map(_.asInstanceOf[Double])
         val oldAvg = Option(
           idx.where(!col("file_path").isin(markers.toSeq: _*))
-            .agg(avg("qerr")).head.get(0))
+            .agg(avg("qerr")).head().get(0))
           .map(_.asInstanceOf[Double])
         (oldAvg, newAvg) match {
           case (Some(o), Some(nw)) if nw > o * (1.0 + threshold) =>

@@ -539,11 +539,9 @@ object TransactionWriter {
     // 1. Materialize data into a staging dir under the table root.
     val staging = new Path(log.rootPath, s".graft-staging-${java.util.UUID.randomUUID}")
     try {
-      Debug.timed(spark, "write parquet") {
-        val w = outDf.write.mode("overwrite")
-        (if (writePartCols.nonEmpty) w.partitionBy(writePartCols: _*) else w)
-          .parquet(staging.toString)
-      }
+      val w = outDf.write.mode("overwrite")
+      (if (writePartCols.nonEmpty) w.partitionBy(writePartCols: _*) else w)
+        .parquet(staging.toString)
 
       // 2. Rename staged part files into place (keeps partition subdirs).
       val staged = listParquet(fs, staging)
@@ -568,9 +566,7 @@ object TransactionWriter {
         .get("delta.dataSkippingNumIndexedCols")
         .flatMap(s => scala.util.Try(s.toInt).toOption)
         .getOrElse(32)
-      val stats = Debug.timed(spark, "stats pass") {
-        computeStats(log, dataSchema, moved, numIndexed)
-      }
+      val stats = computeStats(log, dataSchema, moved, numIndexed)
 
       // 4. Commit.
       val version = prev.map(_.version + 1).getOrElse(0L)
@@ -1268,7 +1264,8 @@ object TransactionWriter {
     var mn: Any = null
     var mx: Any = null
     for (c <- chunks) {
-      val st = c.getStatistics
+      val st: org.apache.parquet.column.statistics.Statistics[_] =
+        c.getStatistics
       if (st == null || !st.isNumNullsSet) return None
       nulls += st.getNumNulls
       val chunkNonNull = c.getValueCount - st.getNumNulls

@@ -9,10 +9,10 @@ import org.apache.spark.sql.DataFrame
   * `defaultParallelism` unconditionally. That is right at scale (a
   * few-file scan must not run a corpus kernel single-threaded) but a
   * CONSTANT at the bottom end: at bench scale every widened stage
-  * carries 32 tiny tasks, and the per-job profile (OverheadProbe)
-  * shows task-launch cost is real while the data per task rounds to
-  * nothing. Guide §2: derive partitioning from input size, not from a
-  * constant tuned for either local mode or the cluster.
+  * carries 32 tiny tasks, and a per-job profile shows task-launch
+  * cost is real while the data per task rounds to nothing. Guide §2:
+  * derive partitioning from input size, not from a constant tuned for
+  * either local mode or the cluster.
   *
   * `widen` derives the target from the optimizer's size estimate for
   * the input plan (file-size-based for scans — free, no job):

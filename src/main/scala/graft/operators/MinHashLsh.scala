@@ -64,7 +64,7 @@ object MinHashLsh {
     val sig = graft.functions.VectorExpressions.minhashSignatures(
       col("hs"), MinhashA, MinhashB, MinhashP)
     val mat = hashed.withColumn("_sig", sig).localCheckpoint()
-    mat.select(hashed.columns.map(col) ++
+    mat.select(hashed.columns.map(col).toSeq ++
       (0 until NumHashes).map(j => element_at(col("_sig"), j + 1).as(s"mh$j")): _*)
   }
 

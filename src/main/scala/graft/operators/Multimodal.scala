@@ -167,7 +167,7 @@ object Multimodal {
     // A trivial identity Partitioner is the one genuine RDD use in this
     // codebase — there is no Dataset API for value-addressed partitions.
     val nP = math.min(nBins, Int.MaxValue.toLong / 2).toInt
-    val out = binned.select(col("__bin") +: df.columns.map(col): _*)
+    val out = binned.select(col("__bin") +: df.columns.map(col).toSeq: _*)
     val spark = df.sparkSession
     val schema = df.schema
     val rdd = out.rdd

@@ -135,7 +135,7 @@ object Queries {
     * materialized blocks.
     *
     * Why a checkpoint and not `persist()`: the round-8 kernel study
-    * (graft.tools.MinhashProfile) found the shingle/minhash kernel
+    * found the shingle/minhash kernel
     * itself costs ~0.25 s at sf0.1 while the "cached"-stage dedup cost
     * ~4.7 s — CacheManager plan substitution silently MISSED the stage
     * subtrees inside the final query (0 InMemoryRelations in its
@@ -4446,7 +4446,7 @@ object Queries {
       graft.delta.Mutations.delete(src, col("doc_id") % 11 === 0)      // v3
       def lag(): Long = graft.plans.GraftSqlParser.run(s,
         s"GRAFT DESCRIBE MATVIEW '$viewPath'")
-        .select("lag").head.getLong(0)
+        .select("lag").head().getLong(0)
       val lagBefore = lag()
       graft.plans.GraftSqlParser.run(s,
         s"GRAFT REFRESH MATVIEW '$viewPath' IF STALE").collect()

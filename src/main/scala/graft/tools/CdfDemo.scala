@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.GraftTable
 import graft.delta.TransactionWriter
@@ -14,14 +13,7 @@ object CdfDemo {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse(
       java.nio.file.Files.createTempDirectory("cdf-demo").toString)
-    val spark = SparkSession.builder()
-      .master("local[4]").appName("cdf-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.locality.wait", "0")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     import spark.implicits._
     try {
       val t = GraftTable(spark, s"$dir/cdf_table")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.delta.{DeltaLog, Maintenance, Mutations, TransactionWriter}
 
 /** End-to-end drive of the v2-checkpoint layout:
@@ -14,15 +13,7 @@ import graft.delta.{DeltaLog, Maintenance, Mutations, TransactionWriter}
   */
 object CheckpointV2Demo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-cp2-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.locality.wait", "0")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     import spark.implicits._
     try {
       for (json <- Seq(false, true)) {

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.{Classifier, IncrementalAgg, SkewJoin}
 
@@ -13,13 +12,7 @@ import graft.operators.{Classifier, IncrementalAgg, SkewJoin}
 object ClassifierDemo {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]").appName("graft-classifier-demo")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     try {
       val docs = spark.read.parquet(s"$dir/documents.parquet")
 

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Incremental-clustering economics probe: at growing base sizes,
@@ -14,13 +13,7 @@ import org.apache.spark.sql.functions._
 object ClusterProbe {
   def main(args: Array[String]): Unit = {
     val maxFactor = if (args.nonEmpty) args(0).toInt else 8
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     import graft.delta.{DeltaLog, Maintenance, TransactionWriter}
     def t[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime(); val r = f
@@ -64,7 +57,7 @@ object ClusterProbe {
           .path("drift").asDouble()).getOrElse(-1.0)
       val kept = clustered.subsetOf(snap.planFiles().map(_.path).toSet)
       val total = n + delta
-      val sumOk = snap.read().agg(count(lit(1)), sum("id")).head ==
+      val sumOk = snap.read().agg(count(lit(1)), sum("id")).head() ==
         org.apache.spark.sql.Row(total, total * (total - 1) / 2)
       // a FULL pass over the same post-append table, for the ratio
       val (vFull1, tFull1) = t(Maintenance.hilbertCluster(log, Seq("a", "b"),

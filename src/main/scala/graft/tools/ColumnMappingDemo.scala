@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.delta.{DeltaLog, TransactionWriter}
 
 /** End-to-end drive of column-mapping writes:
@@ -13,15 +12,7 @@ import graft.delta.{DeltaLog, TransactionWriter}
   * reading a data file under deliberately wrong names. */
 object ColumnMappingDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-cm-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.locality.wait", "0")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     import spark.implicits._
     try {
       val base = if (args.nonEmpty) args(0)

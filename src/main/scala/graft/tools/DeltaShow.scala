@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.delta.DeltaLog
 
 /** CLI inspector for a Delta table read through graft's native log
@@ -10,15 +9,7 @@ import graft.delta.DeltaLog
 object DeltaShow {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: DeltaShow <tablePath> [version]")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-delta-show")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.locality.wait", "0")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     try {
       val log = DeltaLog.forPath(spark, args(0))
       val snap =

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.delta.{DeltaLog, Maintenance, TransactionWriter}
 
 /** End-to-end drive of in-commit timestamps:
@@ -13,15 +12,7 @@ import graft.delta.{DeltaLog, Maintenance, TransactionWriter}
   * version. */
 object IctDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-ict-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.locality.wait", "0")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     import spark.implicits._
     try {
       val dir = if (args.nonEmpty) args(0)

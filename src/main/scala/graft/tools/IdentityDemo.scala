@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types._
 import graft.delta.{DeltaLog, IdentityColumns, TransactionWriter}
 
@@ -13,12 +12,7 @@ object IdentityDemo {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse(
       java.nio.file.Files.createTempDirectory("id-demo").toString)
-    val spark = SparkSession.builder()
-      .master("local[4]").appName("identity-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     import spark.implicits._
     try {
       val log = DeltaLog.forPath(spark, s"$dir/id_table")

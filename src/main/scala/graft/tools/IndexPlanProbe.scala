@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Index-planning economics probe: the refresh/search planning step —
@@ -23,13 +22,7 @@ import org.apache.spark.sql.functions._
 object IndexPlanProbe {
   def main(args: Array[String]): Unit = {
     val maxFactor = if (args.nonEmpty) args(0).toInt else 4
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     import graft.delta.{DeltaLog, LshIndex, IncrementalSidecar, TransactionWriter}
     def t[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime(); val r = f

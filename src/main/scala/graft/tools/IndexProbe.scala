@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Index-sidecar economics probe (LSH + IVF): at growing corpus sizes,
@@ -20,13 +19,7 @@ import org.apache.spark.sql.functions._
 object IndexProbe {
   def main(args: Array[String]): Unit = {
     val maxFactor = if (args.nonEmpty) args(0).toInt else 4
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     // this probe MEASURES the two-phase candidate-bounded probe, so
     // disable the small-corpus shortcut that would route the 30k run
     // through the single-pass shape and skew the bytes ratio

@@ -10,11 +10,7 @@ import org.apache.spark.sql.functions._
 object KernelPlanCheck {
   def main(args: Array[String]): Unit = {
     val sf = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val s = org.apache.spark.sql.SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = graft.GraftSession.local()
     graft.queries.Queries.registerViews(s, sf)
     var failures = 0
     def check(name: String)(ok: Boolean, detail: => String): Unit = {

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.Levi
 import graft.delta.{DeltaLog, TransactionWriter}
 
@@ -12,14 +11,7 @@ object LeviDemo {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse(
       java.nio.file.Files.createTempDirectory("levi-demo").toString)
-    val spark = SparkSession.builder()
-      .master("local[4]").appName("levi-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.locality.wait", "0")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     import spark.implicits._
     try {
       val path = s"$dir/demo_table"

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.{LongType, StructType}
 
 import graft.delta._
@@ -50,14 +49,7 @@ object LogScaleProbe {
     val batches = 10
     val batchSize = nFiles / batches
     val rowsPerFile = 1000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
 
     val tablePath = s"$workDir/table"
     new java.io.File(tablePath).mkdirs()

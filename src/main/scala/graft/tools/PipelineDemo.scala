@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.functions.TextFunctions
 import graft.operators.{MinHashLsh, Similarity}
@@ -13,14 +12,7 @@ import graft.operators.{MinHashLsh, Similarity}
 object PipelineDemo {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]").appName("graft-pipeline-demo")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.locality.wait", "0")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     try {
       val docs = spark.read.parquet(s"$dir/documents.parquet")
       val n0 = docs.count()

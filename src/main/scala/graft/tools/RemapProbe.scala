@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Compaction-remap economics probe: at growing corpus sizes, build
@@ -22,13 +21,7 @@ import org.apache.spark.sql.functions._
 object RemapProbe {
   def main(args: Array[String]): Unit = {
     val maxFactor = if (args.nonEmpty) args(0).toInt else 4
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     import graft.delta.{DeltaLog, LshIndex, PqIndex, Maintenance, TransactionWriter}
     val shims = org.apache.spark.sql.graftshims.SqlShims
     def t[A](f: => A): (A, Double) = {

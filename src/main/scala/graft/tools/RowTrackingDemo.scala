@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.GraftTable
 import graft.delta.{RowTracking, TransactionWriter}
@@ -14,13 +13,7 @@ object RowTrackingDemo {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse(
       java.nio.file.Files.createTempDirectory("rt-demo").toString)
-    val spark = SparkSession.builder()
-      .master("local[4]").appName("rt-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     import spark.implicits._
     try {
       val t = GraftTable(spark, s"$dir/rt_table")

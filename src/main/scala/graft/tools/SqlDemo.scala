@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** End-to-end demo of the GRAFT SQL command surface:
   * `runMain graft.tools.SqlDemo [dir]` — builds a table through the
   * graftdelta DataSource, then drives UPDATE / DELETE / constraint /
@@ -11,14 +9,7 @@ object SqlDemo {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse(
       java.nio.file.Files.createTempDirectory("sql-demo").toString)
-    val spark = SparkSession.builder()
-      .master("local[4]").appName("sql-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(extensions = new graft.GraftExtensions)
     import spark.implicits._
     try {
       val path = s"$dir/sql_table"

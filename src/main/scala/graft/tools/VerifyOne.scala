@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump a single SparkEntry query's result to parquet + its oracle SQL:
   * `runMain graft.tools.VerifyOne <name> [sfDir] [outDir]` — the
   * one-query counterpart of graft.Verify for fast local iteration. */
@@ -11,14 +9,7 @@ object VerifyOne {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
     val outDir = if (args.length > 2) args(2) else "/tmp/verify_one"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local()
     val fn = graft.SparkEntry.queries(name)
     fn(spark, sfDir).write.mode("overwrite").parquet(s"$outDir/$name")
     val sql = graft.SparkEntry.oracleSql.map { case (k, v) =>
