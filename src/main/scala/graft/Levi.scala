@@ -1,9 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, functions => F}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.delta.{DeltaLog, Mutations, Skipping, Snapshot, TransactionWriter}
-import graft.operators.{Dedup, Scd2}
+import graft.delta.{DeltaLog, Mutations, Skipping, Snapshot}
 
 /** The reference's 10-function public API
   * (/root/reference/levi/__init__.py), Spark-native, over graft's own
@@ -150,10 +149,6 @@ object Levi {
   }
 
   // ---- data-quality mutations ----------------------------------------------
-
-  private def rewrite(log: DeltaLog, snap: Snapshot, result: DataFrame, op: String): Long =
-    TransactionWriter.overwrite(log, result,
-      partitionBy = Some(snap.metadata.partitionColumns), operation = op)
 
   /** Delete every member of every duplicate group (reference :119-166).
     * Targeted rewrite: only files containing dup-group rows are

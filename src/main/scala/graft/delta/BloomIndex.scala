@@ -1,6 +1,6 @@
 package graft.delta
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshims.SqlShims
 
@@ -185,7 +185,7 @@ object BloomIndex {
   private def remapEntries(log: DeltaLog, snap: Snapshot,
       entries: DataFrame,
       planned: (Seq[IncrementalSidecar.RemapGroup], Seq[AddFile]),
-      storedVersions: Map[String, Long] = Map.empty)
+      storedVersions: Map[String, Long])
       : (Option[DataFrame], Seq[AddFile]) = {
     val (groups, leftover) = planned
     if (groups.isEmpty) return (None, leftover)

@@ -1,7 +1,7 @@
 package graft.delta
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 

@@ -149,7 +149,6 @@ object IncrementalSidecar {
       if (coverDvFiles) snap.activeCandNorms()
       else snap.activeCandNorms()
         .filterNot(_._1.deletionVector.exists(_.cardinality > 0))
-    val coverable = candNorms.map(_._1)
     val byNorm: Map[String, AddFile] = {
       val (byAll, byDvFree) = snap.candNormIndexes()
       if (coverDvFiles) byAll else byDvFree
@@ -287,24 +286,23 @@ object IncrementalSidecar {
       sourcePaths: Seq[String], commitAdds: Int, sourcesDvFree: Boolean,
       chained: Boolean = false)
 
+  /** Most recent commits [[remapGroups]] walks. */
+  private val RemapMaxCommits = 256
+
   /** Split `missing` into remappable groups and the leftover files
     * that need the full kernel scan. Walks commit JSONs from
     * `sinceVersion + 1` (the sidecar's max entry version — every
     * older active file is covered by the maintenance contract) up to
-    * the snapshot, newest-window-bounded by
-    * `spark.graft.index.remapMaxCommits` (default 256) so a sidecar
-    * that lagged thousands of commits degrades to scanning, not to an
-    * unbounded driver log walk. Driver cost: one JSON commit read per
-    * walked version — log-plane, same order as snapshot resolution. */
+    * the snapshot, newest-window-bounded by [[RemapMaxCommits]] so a
+    * sidecar that lagged thousands of commits degrades to scanning,
+    * not to an unbounded driver log walk. Driver cost: one JSON commit
+    * read per walked version — log-plane, same order as snapshot
+    * resolution. */
   def remapGroups(log: DeltaLog, snap: Snapshot, missing: Seq[AddFile],
       coveredNorm: Set[String], storedPaths: Seq[String],
       sinceVersion: Long): (Seq[RemapGroup], Seq[AddFile]) = {
     if (missing.isEmpty || storedPaths.isEmpty) return (Nil, missing)
-    val maxCommits = log.spark.conf
-      .getOption("spark.graft.index.remapMaxCommits")
-      .flatMap(_.trim.toIntOption).getOrElse(256)
-    if (maxCommits <= 0) return (Nil, missing)
-    val lo = math.max(sinceVersion + 1, snap.version - maxCommits + 1)
+    val lo = math.max(sinceVersion + 1, snap.version - RemapMaxCommits + 1)
     if (lo > snap.version) return (Nil, missing)
     val missingByNorm: Map[String, AddFile] = missing
       .flatMap(f => snap.pathCandidates(f).map(c => Mutations.normalize(c) -> f))

@@ -1,7 +1,6 @@
 package graft.delta
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.functions._
 
 /** Generic machinery over the sidecar indexes (Bloom / LSH / IVF /
   * IVF-PQ): inventory for `GRAFT SHOW INDEXES` and the write-path

@@ -195,9 +195,8 @@ object IvfIndex {
     * frozen quantizer — new points would pile into ill-fitting cells
     * and probe recall would silently rot — and the refresh routes to a
     * full [[build]], which retrains with the ORIGINAL build's
-    * (k, iterations) from the sidecar `_meta`. NaN (the default)
-    * defers to `spark.graft.ivf.driftThreshold` (default 0.2 cosine);
-    * ≥ 2 can never trigger (cosine spans 4 ⇒ forced incremental).
+    * (k, iterations) from the sidecar `_meta`. The default is 0.2
+    * cosine; ≥ 2 can never trigger (cosine spans 4 ⇒ forced incremental).
     *
     * `deferRebuild` (the write-path-hook posture): a gauge trip does
     * NOT synchronously pay the O(corpus) retrain — it logs loudly and
@@ -205,7 +204,7 @@ object IvfIndex {
     * contract; recall quality is flagged, never silently rotted, and
     * an explicit user REFRESH/REBUILD picks the retrain up. */
   def refresh(log: DeltaLog, idCol: String, vecCol: String,
-      driftThreshold: Double = Double.NaN,
+      driftThreshold: Double = 0.2,
       deferRebuild: Boolean = false): Long = {
     val spark = log.spark
     val snap = log.snapshot
@@ -253,12 +252,8 @@ object IvfIndex {
         // share one assignment pass over the new files
         val e = scanEntries(log, snap, missing, idCol, vecCol,
           storedCentroids(idx)).localCheckpoint()
-        val threshold = {
-          val v = if (!driftThreshold.isNaN) driftThreshold
-            else spark.conf.get("spark.graft.ivf.driftThreshold", "0.2").toDouble
-          require(v >= 0.0, s"driftThreshold must be >= 0, got $v")
-          v
-        }
+        require(driftThreshold >= 0.0,
+          s"driftThreshold must be >= 0, got $driftThreshold")
         val newAvg = Option(e.agg(avg("asim")).head().get(0))
           .map(_.asInstanceOf[Double])
         val oldAvg = Option(
@@ -266,7 +261,7 @@ object IvfIndex {
             .agg(avg("asim")).head().get(0))
           .map(_.asInstanceOf[Double])
         (oldAvg, newAvg) match {
-          case (Some(o), Some(nw)) if o - nw > threshold =>
+          case (Some(o), Some(nw)) if o - nw > driftThreshold =>
             if (deferRebuild) {
               // write-path hook: keep the O(uncovered) contract — flag
               // the drift loudly and fall through to the incremental
@@ -274,7 +269,7 @@ object IvfIndex {
               org.slf4j.LoggerFactory.getLogger(getClass).warn(
                 s"IVF index on ${log.tablePath} ($idCol,$vecCol): " +
                   f"assignment-quality drift (old mean $o%.4f, new " +
-                  f"$nw%.4f > $threshold%.2f) — retrain deferred to an " +
+                  f"$nw%.4f > $driftThreshold%.2f) — retrain deferred to an " +
                   "explicit REFRESH; probe recall on new data may degrade")
             } else {
               // the frozen quantizer no longer fits the incoming data —

@@ -1,6 +1,6 @@
 package graft.delta
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.MinHashLsh
 
@@ -55,6 +55,10 @@ import graft.operators.MinHashLsh
   * file-count-sized (the BloomIndex posture).
   */
 object LshIndex {
+
+  /** Most candidate ids the two-phase probe pushes down as an `IN`
+    * list; past it the probe keeps the single-pass shape. */
+  private val ProbeIdPushdownMax = 10000
 
   /** Shingle width is pinned to [[MinHashLsh]]'s default (word
     * 3-grams): the index stores derived signatures, so every consumer
@@ -213,16 +217,6 @@ object LshIndex {
     snap.version
   }
 
-  /** Index-backed incremental fuzzy dedup: drop from `newBatch` every
-    * doc that near-duplicates (exact Jaccard ≥ `threshold` on hashed
-    * 3-gram shingle sets) ANY doc in the indexed corpus table —
-    * result ≡ [[MinHashLsh.dedupAgainstCorpus]](newBatch,
-    * corpus.read()), with the prior side served from the sidecar:
-    * covered files contribute their persisted (id, hs, ks) rows
-    * (columnar read, no text, no kernel), uncovered/DV'd files are
-    * computed live, and with no index at all the whole call degrades
-    * to the direct operator. `maxBucketSize` follows
-    * [[MinHashLsh.candidatePairs]]'s conf-deferral semantics. */
   /** Index-backed containment screen: every CROSS pair (batch id,
     * corpus id) with Broder containment ≥ `threshold` — result ≡
     * [[MinHashLsh.containmentAgainstCorpus]](newBatch, corpus.read()),
@@ -267,7 +261,7 @@ object LshIndex {
     val hNew = hashedBatch.getOrElse(
       MinHashLsh.hashedShingles(newBatch, idCol, textCol).localCheckpoint())
     MinHashLsh.containmentCrossPairs(hNew, idCol, threshold, anchorK,
-      MinHashLsh.effectiveCap(newBatch, maxBucketSize), broadcastKeys,
+      maxBucketSize, broadcastKeys,
       priorHashed,
       // verify attach: one more columnar (id, hs) pass semi-joined to
       // the candidate ids (id-sorted generation → row-group pruning
@@ -287,6 +281,16 @@ object LshIndex {
       })
   }
 
+  /** Index-backed incremental fuzzy dedup: drop from `newBatch` every
+    * doc that near-duplicates (exact Jaccard ≥ `threshold` on hashed
+    * 3-gram shingle sets) ANY doc in the indexed corpus table —
+    * result ≡ [[MinHashLsh.dedupAgainstCorpus]](newBatch,
+    * corpus.read()), with the prior side served from the sidecar:
+    * covered files contribute their persisted (id, hs, ks) rows
+    * (columnar read, no text, no kernel), uncovered/DV'd files are
+    * computed live, and with no index at all the whole call degrades
+    * to the direct operator. `maxBucketSize` follows
+    * [[MinHashLsh.candidatePairs]] (≤ 0 = off). */
   def dedupBatch(log: DeltaLog, newBatch: DataFrame,
       idCol: String, textCol: String, threshold: Double = 0.5,
       broadcastKeys: Boolean = true, maxBucketSize: Int = 0,
@@ -304,9 +308,8 @@ object LshIndex {
     // or index entries gone stale
     val (usableStored, liveFiles) = IncrementalSidecar.probeCoverage(
       snap, storedPaths, coverDvFiles = false, counts)
-    val cap = MinHashLsh.effectiveCap(newBatch, maxBucketSize)
     MinHashLsh.dedupAgainstPrior(newBatch, idCol, textCol, threshold,
-      broadcastKeys, cap,
+      broadcastKeys, maxBucketSize,
       newKeys => {
         // TWO-PHASE candidate-bounded probe: the hs arrays (the wide
         // column — roughly token-count longs per row) must not be read
@@ -317,8 +320,7 @@ object LshIndex {
         // sidecar with a pushed `id IN (candidates)` filter — the
         // generation is id-sorted, so parquet row-group stats skip
         // everything else — and only THOSE rows' hs bytes load.
-        // Above the literal-pushdown cap
-        // (spark.graft.lsh.probeIdPushdownMax, default 10000) the
+        // Above the literal-pushdown cap ([[ProbeIdPushdownMax]]) the
         // probe keeps the single-pass shape (a huge IN list costs more
         // in filter evaluation than the wide scan saves). BELOW
         // spark.graft.lsh.probeTwoPhaseMinRows (default 100000) stored
@@ -329,9 +331,6 @@ object LshIndex {
         // gate). The probe-bytes win two-phase buys only shows at
         // larger corpora (IndexProbe pins the conf to 0 to measure it).
         val covered = IncrementalSidecar.keepStored(spark, idx, usableStored)
-        val maxIn = spark.conf
-          .getOption("spark.graft.lsh.probeIdPushdownMax")
-          .flatMap(_.trim.toIntOption).getOrElse(10000)
         val minRows = spark.conf
           .getOption("spark.graft.lsh.probeTwoPhaseMinRows")
           .flatMap(_.trim.toLongOption).getOrElse(100000L)
@@ -340,13 +339,13 @@ object LshIndex {
           if (counts.isEmpty) Long.MaxValue else counts.valuesIterator.sum
         val indexed = {
           val candIds =
-            if (maxIn <= 0 || storedRows < minRows) null
+            if (storedRows < minRows) null
             else {
               val ids = covered
                 .select(col(idCol), posexplode(col("ks")).as(Seq("band", "k")))
                 .join(newKeys, Seq("band", "k"), "left_semi")
-                .select(idCol).distinct().limit(maxIn + 1).collect()
-              if (ids.length > maxIn) null else ids.map(_.get(0))
+                .select(idCol).distinct().limit(ProbeIdPushdownMax + 1).collect()
+              if (ids.length > ProbeIdPushdownMax) null else ids.map(_.get(0))
             }
           val src =
             if (candIds == null) covered

@@ -1352,7 +1352,7 @@ object Maintenance {
       curve: Seq[org.apache.spark.sql.Column] => org.apache.spark.sql.Column,
       opName: String, targetFileBytes: Long,
       where: Option[org.apache.spark.sql.Column],
-      curveKind: String = ""): Long = {
+      curveKind: String): Long = {
     val snap = log.snapshot
     val scopePred = where.map(w => partitionScope(log, snap, w))
     val planned = snap.planFiles(scopePred)
@@ -1427,16 +1427,15 @@ object Maintenance {
     * target files (one column-pruned agg over the delta it already
     * scans) and persists it in the clustering state; when the fraction
     * exceeds `driftThreshold` the pass routes to a FULL re-cluster,
-    * which re-derives the bounds. NaN (the default) defers to the
-    * session conf `spark.graft.cluster.driftThreshold` (default 0.25);
-    * a threshold ≥ 1 forces incremental regardless of drift.
+    * which re-derives the bounds. The default is 0.25; a threshold
+    * ≥ 1 forces incremental regardless of drift.
     *
     * Returns the current version when there is nothing new. Requires a
     * prior full pass with the same curve and columns. */
   def clusterIncremental(
       log: DeltaLog, cols: Seq[String], curveKind: String,
       targetFileBytes: Long = 128L * 1024 * 1024,
-      driftThreshold: Double = Double.NaN): Long = {
+      driftThreshold: Double = 0.25): Long = {
     val snap = log.snapshot
     val stateStr = Domains.get(snap, ClusterStateDomain).getOrElse(
       throw new IllegalStateException(
@@ -1490,15 +1489,9 @@ object Maintenance {
     val drift = Option(
       df.agg(avg(when(oob, 1.0).otherwise(0.0))).head().get(0))
       .map(_.asInstanceOf[Double]).getOrElse(0.0)
-    val threshold = {
-      val conf =
-        if (!driftThreshold.isNaN) driftThreshold
-        else log.spark.conf
-          .get("spark.graft.cluster.driftThreshold", "0.25").toDouble
-      require(conf >= 0.0, s"driftThreshold must be >= 0, got $conf")
-      conf
-    }
-    if (drift > threshold)
+    require(driftThreshold >= 0.0,
+      s"driftThreshold must be >= 0, got $driftThreshold")
+    if (drift > driftThreshold)
       // past the threshold, clamped layout quality is gone — run the
       // full pass instead: it re-derives bounds from the whole table
       // (and resets the persisted drift to 0 via clusterRewrite)

@@ -209,10 +209,8 @@ final case class Merge(
     // are 1-3 files; a fixed discovery pass per refresh was measured at
     // ~30% of the merge). Only when neither the guard (uniqueSource
     // skips it) nor the DV planner needs per-row matches.
-    val discoveryMin = log.spark.conf
-      .get("spark.graft.merge.discoveryMinFiles", "8").toInt
     val needMatches = !uniqueSource || dvCandidate ||
-      (!hasBySource && !insertOnly && planned.size > discoveryMin)
+      (!hasBySource && !insertOnly && planned.size > Merge.DiscoveryMinFiles)
     val matchesOpt: Option[DataFrame] =
       if (!needMatches) None
       else Some(tagged.join(src, condition)
@@ -500,6 +498,10 @@ final case class Merge(
 }
 
 object Merge {
+  /** Target-file count at or below which a unique-source merge
+    * rewrites every planned file instead of running a discovery pass. */
+  private val DiscoveryMinFiles = 8
+
   /** Start building a merge of `source` into the table at `log` on
     * `condition` (target alias `t`, source alias `s`). */
   def into(log: DeltaLog, source: DataFrame, condition: Column): Merge =

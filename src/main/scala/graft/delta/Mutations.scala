@@ -312,7 +312,7 @@ object Mutations {
     * version (current version when nothing matched). */
   def killDuplicates(log: DeltaLog, duplicationColumns: Seq[String]): Long = {
     val snap = log.snapshot
-    Dedup.requireCols(snap.read(), duplicationColumns, "duplication_columns")
+    Dedup.requireCols(snap.schema, duplicationColumns, "duplication_columns")
     val dupKeys = snap.read()
       .groupBy(duplicationColumns.map(col): _*)
       .agg(count(lit(1)).as("__cnt")).where(col("__cnt") > 1)
@@ -332,10 +332,16 @@ object Mutations {
     * dup group can be hot; requires `orderBy` to be a total order. */
   def dropDuplicatesOrdered(
       log: DeltaLog, duplicationColumns: Seq[String], orderBy: Seq[String],
-      salts: Int = 0): Long = {
-    val snap = log.snapshot
+      salts: Int = 0): Long =
+    dropDuplicatesOrdered(log, log.snapshot, duplicationColumns, orderBy, salts)
+
+  /** [[dropDuplicatesOrdered]] on a snapshot the caller already
+    * resolved (and validated against). */
+  private def dropDuplicatesOrdered(log: DeltaLog, snap: Snapshot,
+      duplicationColumns: Seq[String], orderBy: Seq[String],
+      salts: Int): Long = {
     val data = snap.read()
-    Dedup.requireCols(data, duplicationColumns, "duplication_columns")
+    Dedup.requireCols(snap.schema, duplicationColumns, "duplication_columns")
     require(orderBy.nonEmpty, "orderBy must be non-empty for a deterministic survivor")
     val dupKeys = data.groupBy(duplicationColumns.map(col): _*)
       .agg(count(lit(1)).as("__cnt")).where(col("__cnt") > 1)
@@ -367,9 +373,11 @@ object Mutations {
   def dropDuplicatesPkey(
       log: DeltaLog, primaryKey: String, duplicationColumns: Seq[String]): Long = {
     val snap = log.snapshot
-    // runs every validation eagerly (incl. the uniqueness count guard)
+    // runs every validation eagerly (incl. the uniqueness count guard),
+    // on the same snapshot the rewrite then plans against — a commit
+    // landing in between cannot slip past the validation
     Dedup.dropDuplicatesPkey(snap.read(), primaryKey, duplicationColumns)
-    dropDuplicatesOrdered(log, duplicationColumns, Seq(primaryKey))
+    dropDuplicatesOrdered(log, snap, duplicationColumns, Seq(primaryKey), salts = 0)
   }
 
   /** SCD2 upsert with targeted rewrite: only files holding a CURRENT
@@ -415,22 +423,6 @@ object Mutations {
       extraActions = cdc)
   }
 
-  /** DELETE via deletion vectors: mark matching rows deleted in a
-    * sidecar bitmap instead of rewriting their files — the modern
-    * delta-spark default. Cost is O(matched rows) bitmap bytes + one
-    * metadata commit; a predicate touching 0.001% of a 100 TB table
-    * writes KBs where the rewrite path writes the touched files.
-    * Upgrades the table protocol to reader 3 / writer 7 with the
-    * `deletionVectors` feature on first use (as delta-spark does when
-    * `delta.enableDeletionVectors` turns on).
-    *
-    * Sizing note: the matched (file, row) set is aggregated per file and
-    * streamed to the driver to build bitmaps — right for SELECTIVE
-    * deletes. Deleting most of a table should use the rewrite paths
-    * above instead (same guidance delta-spark gives).
-    *
-    * Returns the committed version (current version when no row
-    * matches). */
   /** Per-plan outcome of [[dvMarkActions]]: no matching row, a bounded
     * action set, or a refusal because the match set is too large to
     * driver-materialize as bitmaps (caller falls back to the targeted
@@ -443,13 +435,16 @@ object Mutations {
 
   /** Matched-row caps for the DV path (driver bitmap memory guard):
     * absolute rows and fraction of the table's rows (from stats; files
-    * without numRecords are ignored by the fraction check). */
-  private def dvMaxMatchedRows(log: DeltaLog): Long =
-    log.spark.conf.getOption("spark.graft.dv.maxMatchedRows")
-      .map(_.toLong).getOrElse(10000000L)
-  private def dvMaxMatchedFraction(log: DeltaLog): Double =
-    log.spark.conf.getOption("spark.graft.dv.maxMatchedFraction")
-      .map(_.toDouble).getOrElse(0.5)
+    * without numRecords are ignored by the fraction check). The
+    * fraction cap guards against DV-ing most of a LARGE table
+    * (write-amplification: better to rewrite); at or below
+    * `fractionCheckMinRows` matched rows the bitmaps are KB-scale and
+    * either route is fine, so the table-rows stats aggregation — one
+    * whole Spark job on the mutation hot path — is skipped. */
+  private[delta] final case class DvLimits(
+      maxMatchedRows: Long = 10000000L,
+      maxMatchedFraction: Double = 0.5,
+      fractionCheckMinRows: Long = 65536L)
 
   /** Actions marking every row matching `predicate` as deleted via
     * per-file deletion vectors (merged into any existing DV), plus the
@@ -461,7 +456,7 @@ object Mutations {
     * disjoint. */
   private def dvMarkActions(
       log: DeltaLog, snap: Snapshot,
-      predicate: org.apache.spark.sql.Column): DvPlan = {
+      predicate: org.apache.spark.sql.Column, limits: DvLimits): DvPlan = {
     // candidates pruned by stats in Spark; only straddling files
     // scanned. FULL rows when the candidate set is small — the DV
     // re-add needs their stats anyway, and fetching them here saves
@@ -471,7 +466,7 @@ object Mutations {
     dvPlanFromMatches(log, snap,
       snap.readFilesLineage(candidates).where(predicate)
         .select(col("__file"), col("__row")),
-      candidates, candidatesHaveStats = haveStats)
+      candidates, candidatesHaveStats = haveStats, limits)
   }
 
   /** [[dvMarkActions]] generalized to a pre-computed matched
@@ -483,7 +478,8 @@ object Mutations {
       log: DeltaLog, snap: Snapshot,
       matchedRowsDf: org.apache.spark.sql.DataFrame,
       candidates: Seq[AddFile],
-      candidatesHaveStats: Boolean = false): DvPlan = {
+      candidatesHaveStats: Boolean = false,
+      limits: DvLimits = DvLimits()): DvPlan = {
     val grouped = matchedRowsDf
       .groupBy(col("__file"))
       .agg(count(lit(1)).as("__cnt"),
@@ -495,23 +491,14 @@ object Mutations {
         case r => r.getLong(0)
       }
       if (matchedRows == 0L) return DvNoMatch
-      val maxRows = dvMaxMatchedRows(log)
-      val maxFrac = dvMaxMatchedFraction(log)
-      // The fraction cap guards against DV-ing most of a LARGE table
-      // (write-amplification: better to rewrite). Below this floor the
-      // bitmaps are KB-scale and either route is fine — skip the
-      // table-rows stats aggregation, one whole Spark job on the
-      // mutation hot path.
-      val fracCheckFloor = log.spark.conf
-        .getOption("spark.graft.dv.fractionCheckMinRows")
-        .map(_.toLong).getOrElse(65536L)
       lazy val tableRows: Option[Long] = {
         val r = snap.addsFlat.agg(sum(col("num_records"))).collect()(0)
         if (r.isNullAt(0)) None else Some(r.getLong(0))
       }
-      if (matchedRows > maxRows ||
-          (matchedRows > fracCheckFloor &&
-            tableRows.exists(t => t > 0 && matchedRows > t * maxFrac)))
+      if (matchedRows > limits.maxMatchedRows ||
+          (matchedRows > limits.fractionCheckMinRows &&
+            tableRows.exists(t => t > 0 &&
+              matchedRows > t * limits.maxMatchedFraction)))
         return DvTooBroad(matchedRows)
       val idx = fileIndex(snap, candidates)
       grouped.select(col("__file"), col("__rows"))
@@ -567,11 +554,33 @@ object Mutations {
     DvActions(actions.toSeq, mergedRows.map(_._1))
   }
 
-  def deleteWithDv(log: DeltaLog, predicate: org.apache.spark.sql.Column): Long = {
+  /** DELETE via deletion vectors: mark matching rows deleted in a
+    * sidecar bitmap instead of rewriting their files — the modern
+    * delta-spark default. Cost is O(matched rows) bitmap bytes + one
+    * metadata commit; a predicate touching 0.001% of a 100 TB table
+    * writes KBs where the rewrite path writes the touched files.
+    * Upgrades the table protocol to reader 3 / writer 7 with the
+    * `deletionVectors` feature on first use (as delta-spark does when
+    * `delta.enableDeletionVectors` turns on).
+    *
+    * Sizing note: the matched (file, row) set is aggregated per file and
+    * streamed to the driver to build bitmaps — right for SELECTIVE
+    * deletes. Deleting most of a table should use the rewrite paths
+    * above instead (same guidance delta-spark gives).
+    *
+    * Returns the committed version (current version when no row
+    * matches). */
+  def deleteWithDv(log: DeltaLog, predicate: org.apache.spark.sql.Column): Long =
+    deleteWithDv(log, predicate, DvLimits())
+
+  /** [[deleteWithDv]] with the DV-path caps as a parameter, so a test
+    * can reach the fallback at small scale. */
+  private[delta] def deleteWithDv(log: DeltaLog,
+      predicate: org.apache.spark.sql.Column, limits: DvLimits): Long = {
     val snap = log.snapshot
     require(!snap.metadata.configuration.get("delta.appendOnly").contains("true"),
       s"cannot delete from ${log.tablePath}: table is delta.appendOnly")
-    val (dvActions, touched) = dvMarkActions(log, snap, predicate) match {
+    val (dvActions, touched) = dvMarkActions(log, snap, predicate, limits) match {
       case DvNoMatch => return snap.version
       // too many matched rows to bitmap on the driver — the targeted
       // rewrite deletes the same rows with executor-side state only
@@ -611,7 +620,7 @@ object Mutations {
     require(set.nonEmpty, "UPDATE needs at least one SET column")
     set.keys.foreach(k => require(schema.fieldNames.contains(k),
       s"SET column '$k' not in table schema ${schema.fieldNames.toSeq}"))
-    val (dvActions, touched) = dvMarkActions(log, snap, predicate) match {
+    val (dvActions, touched) = dvMarkActions(log, snap, predicate, DvLimits()) match {
       case DvNoMatch => return snap.version
       case DvTooBroad(_) => return update(log, predicate, set)
       case DvActions(a, t) => (a, t)

@@ -45,10 +45,9 @@ import graft.operators.Pq
   * gauge's bounded cosine, so the test is `new > old · (1+t)`), the
   * frozen codebooks no longer describe the incoming distribution —
   * ADC distances would silently rot — and the refresh routes to a full
-  * [[build]] retrain with the same (kCoarse, m, k). NaN defers to
-  * `spark.graft.ivfpq.driftThreshold` (default 1.0 = new mean error
-  * more than double the old); `Double.PositiveInfinity` forces the
-  * incremental path.
+  * [[build]] retrain with the same (kCoarse, m, k). The default 1.0
+  * trips when the new mean error is more than double the old;
+  * `Double.PositiveInfinity` forces the incremental path.
   *
   * Scale shape: build/refresh is one map-only encode pass over the
   * missing files (m·k + kCoarse small distance evaluations per row) +
@@ -170,7 +169,7 @@ object PqIndex {
       idCol: String, vecCol: String,
       coarse: Seq[(Int, Long, Array[Double])],
       books: Seq[(Int, Long, Array[Double])],
-      perm: Option[Seq[Int]] = None): DataFrame =
+      perm: Option[Seq[Int]]): DataFrame =
     encodeRows(
       maybePermute(rawRows(log, snap, files, idCol, vecCol), vecCol, perm),
       vecCol, coarse, books)
@@ -183,7 +182,7 @@ object PqIndex {
   private def quantizerRows(log: DeltaLog, snap: Snapshot, idCol: String,
       coarse: Seq[(Int, Long, Array[Double])],
       books: Seq[(Int, Long, Array[Double])], trainedVersion: Long,
-      perm: Option[Seq[Int]] = None): DataFrame = {
+      perm: Option[Seq[Int]]): DataFrame = {
     import log.spark.implicits._
     val idType = snap.schema(idCol).dataType
     (coarse.map { case (j, cid, cv) => (CoarseMarker, j, cid, Some(cv.toSeq)) } ++
@@ -261,7 +260,7 @@ object PqIndex {
     * O(uncovered files) contract; an explicit user REFRESH picks the
     * retrain up. Returns the indexed version. */
   def refresh(log: DeltaLog, idCol: String, vecCol: String,
-      driftThreshold: Double = Double.NaN,
+      driftThreshold: Double = 1.0,
       deferRebuild: Boolean = false): Long = {
     val spark = log.spark
     val snap = log.snapshot
@@ -311,12 +310,8 @@ object PqIndex {
         // share one encode pass over the new files
         val e = scanEntries(log, snap, missing, idCol, vecCol, coarse, books,
           perm).localCheckpoint()
-        val threshold = {
-          val v = if (!driftThreshold.isNaN) driftThreshold
-            else spark.conf.get("spark.graft.ivfpq.driftThreshold", "1.0").toDouble
-          require(v >= 0.0, s"driftThreshold must be >= 0, got $v")
-          v
-        }
+        require(driftThreshold >= 0.0,
+          s"driftThreshold must be >= 0, got $driftThreshold")
         val newAvg = Option(e.agg(avg("qerr")).head().get(0))
           .map(_.asInstanceOf[Double])
         val oldAvg = Option(
@@ -324,12 +319,12 @@ object PqIndex {
             .agg(avg("qerr")).head().get(0))
           .map(_.asInstanceOf[Double])
         (oldAvg, newAvg) match {
-          case (Some(o), Some(nw)) if nw > o * (1.0 + threshold) =>
+          case (Some(o), Some(nw)) if nw > o * (1.0 + driftThreshold) =>
             if (deferRebuild) {
               org.slf4j.LoggerFactory.getLogger(getClass).warn(
                 s"IVF-PQ index on ${log.tablePath} ($idCol,$vecCol): " +
                   f"reconstruction-error drift (old mean $o%.4f, new " +
-                  f"$nw%.4f, threshold ${threshold}%.2f rel) — retrain " +
+                  f"$nw%.4f, threshold ${driftThreshold}%.2f rel) — retrain " +
                   "deferred to an explicit REFRESH; ADC quality on new " +
                   "data may degrade")
             } else {

@@ -28,10 +28,24 @@ object Skipping {
       case "<=" => lo <= lit(value)
       case ">" => hi > lit(value)
       case ">=" => hi >= lit(value)
-      case other => throw new IllegalArgumentException(
-        s"filter operator '$other' is not supported (=, <, <=, >, >=)")
+      case other => unsupported(other)
     }
   }
+
+  /** `lhs op value` on one row (or one partition value). */
+  private def compare(lhs: Column, op: String, value: Any): Column =
+    op match {
+      case "=" => lhs === lit(value)
+      case "<" => lhs < lit(value)
+      case "<=" => lhs <= lit(value)
+      case ">" => lhs > lit(value)
+      case ">=" => lhs >= lit(value)
+      case other => unsupported(other)
+    }
+
+  private def unsupported(op: String): Nothing =
+    throw new IllegalArgumentException(
+      s"filter operator '$op' is not supported (=, <, <=, >, >=)")
 
   /** Conjunction of filters (the reference joins with " and "). */
   def filtersToColumn(filters: Seq[(String, String, Any)]): Column =
@@ -50,8 +64,7 @@ object Skipping {
       case "<=" => s"(`min.$c` <= $v)"
       case ">" => s"(`max.$c` > $v)"
       case ">=" => s"(`max.$c` >= $v)"
-      case other => throw new IllegalArgumentException(
-        s"filter operator '$other' is not supported (=, <, <=, >, >=)")
+      case other => unsupported(other)
     }
   }
 
@@ -71,17 +84,7 @@ object Skipping {
     val partPredicate: Option[Column] =
       if (partFilters.isEmpty) None
       else Some(partFilters.map { case (c, op, v) =>
-        val dt = snap.schema(c).dataType
-        val pv = element_at(col("partition_values"), snap.physicalNameOf(c)).cast(dt)
-        op match {
-          case "=" => pv === lit(v)
-          case "<" => pv < lit(v)
-          case "<=" => pv <= lit(v)
-          case ">" => pv > lit(v)
-          case ">=" => pv >= lit(v)
-          case other => throw new IllegalArgumentException(
-            s"filter operator '$other' is not supported (=, <, <=, >, >=)")
-        }
+        compare(partValue(snap, c), op, v)
       }.reduceLeft(_ && _))
     val statsPredicate: Option[Column] =
       if (statsFilters.isEmpty) None
@@ -95,17 +98,15 @@ object Skipping {
         }.reduceLeft(_ && _)
         Some(!haveStats || mayMatch)
       }
-    val predicate = (partPredicate.toSeq ++ statsPredicate.toSeq).reduceLeft(_ && _)
-    // Pruning runs IN SPARK over the metadata relation; only surviving
-    // AddFiles are collected to the driver. At 10⁷ files with a
-    // selective predicate this is the difference between collecting a
-    // handful of rows and collecting hundreds of driver MB.
-    val survivors = snap.addsFlat.where(predicate).select("path")
-    val out = snap.slimAdds.join(survivors, Seq("path"), "left_semi")
-      .collect().toSeq.map(snap.rowToAddFile)
-    Snapshot.driverFileRowsCollected.addAndGet(out.size)
-    out
+    snap.planFilesPruned(
+      (partPredicate.toSeq ++ statsPredicate.toSeq).reduceLeft(_ && _))
   }
+
+  /** A partition column's value in [[Snapshot.addsFlat]], cast from
+    * its string encoding to the declared type. */
+  private def partValue(snap: Snapshot, c: String): Column =
+    element_at(col("partition_values"), snap.physicalNameOf(c))
+      .cast(snap.schema(c).dataType)
 
   /** Best-effort translation of a ROW predicate (an arbitrary
     * `Column`, e.g. a DELETE/UPDATE WHERE clause) into a FILE-pruning
@@ -190,11 +191,11 @@ object Skipping {
         lazy val fv = evalGenAt(exprStr, base, v)
         op match {
           case "=" =>
-            fv.map(x => partValue(g) === lit(x)).getOrElse(lit(true))
+            fv.map(x => partValue(snap, g) === lit(x)).getOrElse(lit(true))
           case "<" | "<=" if mono =>
-            fv.map(x => partValue(g) <= lit(x)).getOrElse(lit(true))
+            fv.map(x => partValue(snap, g) <= lit(x)).getOrElse(lit(true))
           case ">" | ">=" if mono =>
-            fv.map(x => partValue(g) >= lit(x)).getOrElse(lit(true))
+            fv.map(x => partValue(snap, g) >= lit(x)).getOrElse(lit(true))
           case _ => lit(true)
         }
       }.foldLeft(lit(true))(_ && _)
@@ -213,32 +214,14 @@ object Skipping {
           .map(v => CatalystTypeConverters.convertToScala(v, c.dataType))
       case _ => None
     }
-    def partValue(c: String): Column =
-      element_at(col("partition_values"), snap.physicalNameOf(c))
-        .cast(snap.schema(c).dataType)
     def cmp(c: String, op: String, v: Any): Column =
-      if (partCols.contains(c)) {
-        val pv = partValue(c)
-        op match {
-          case "=" => pv === lit(v)
-          case "<" => pv < lit(v)
-          case "<=" => pv <= lit(v)
-          case ">" => pv > lit(v)
-          case ">=" => pv >= lit(v)
-        }
-      } else {
+      if (partCols.contains(c)) compare(partValue(snap, c), op, v)
+      else {
         val statsMay =
           if (!statsFields.contains(c)) lit(true)
           else {
             val have = col(s"min.$c").isNotNull && col(s"max.$c").isNotNull
-            val may = op match {
-              case "=" => col(s"min.$c") <= lit(v) && col(s"max.$c") >= lit(v)
-              case "<" => col(s"min.$c") < lit(v)
-              case "<=" => col(s"min.$c") <= lit(v)
-              case ">" => col(s"max.$c") > lit(v)
-              case ">=" => col(s"max.$c") >= lit(v)
-            }
-            !have || may
+            !have || filterToColumn(c, op, v)
           }
         statsMay && genConstraint(c, op, v)
       }
@@ -266,12 +249,12 @@ object Skipping {
         attrOf(a).map(c => list.flatMap(litOf).map(v => cmp(c, "=", v))
           .reduce(_ || _))
       case ce.IsNull(a) => attrOf(a).map { c =>
-        if (partCols.contains(c)) partValue(c).isNull
+        if (partCols.contains(c)) partValue(snap, c).isNull
         else if (!statsFields.contains(c)) lit(true) // gen-base only: no null stats
         else !col(s"null_count.$c").isNotNull || col(s"null_count.$c") > 0
       }
       case ce.IsNotNull(a) => attrOf(a).map { c =>
-        if (partCols.contains(c)) partValue(c).isNotNull
+        if (partCols.contains(c)) partValue(snap, c).isNotNull
         else if (!statsFields.contains(c)) lit(true)
         else {
           val have = col(s"null_count.$c").isNotNull && col("num_records").isNotNull
@@ -289,8 +272,8 @@ object Skipping {
             Some(!(col(s"min.$c") === lit(v) && col(s"max.$c") === lit(v)))
           case (Some(c), Some(v), _, _) if !partCols.contains(c) => None
           case (_, _, Some(c), Some(v)) if !partCols.contains(c) => None
-          case (Some(c), Some(v), _, _) => Some(!(partValue(c) === lit(v)))
-          case (_, _, Some(c), Some(v)) => Some(!(partValue(c) === lit(v)))
+          case (Some(c), Some(v), _, _) => Some(!(partValue(snap, c) === lit(v)))
+          case (_, _, Some(c), Some(v)) => Some(!(partValue(snap, c) === lit(v)))
           case _ => None
         }
       case _ => None
@@ -313,15 +296,7 @@ object Skipping {
   def readWhere(snap: Snapshot, filters: Seq[(String, String, Any)]) = {
     val df = snap.readFiles(prunedFiles(snap, filters))
     if (filters.isEmpty) df
-    else df.where(filters.map { case (c, op, v) =>
-      op match {
-        case "=" => col(c) === lit(v)
-        case "<" => col(c) < lit(v)
-        case "<=" => col(c) <= lit(v)
-        case ">" => col(c) > lit(v)
-        case ">=" => col(c) >= lit(v)
-        case other => throw new IllegalArgumentException(s"bad op $other")
-      }
-    }.reduceLeft(_ && _))
+    else df.where(filters.map { case (c, op, v) => compare(col(c), op, v) }
+      .reduceLeft(_ && _))
   }
 }

@@ -580,14 +580,24 @@ class Snapshot(
   private[graft] def planFilesForPredicate(
       rowPredicate: org.apache.spark.sql.Column): Seq[AddFile] =
     Skipping.pruningPredicate(this, rowPredicate) match {
-      case Some(p) =>
-        val survivors = addsFlat.where(p).select("path")
-        val out = slimAdds.join(survivors, Seq("path"), "left_semi")
-          .collect().toSeq.map(rowToAddFile)
-        Snapshot.driverFileRowsCollected.addAndGet(out.size)
-        out
+      case Some(p) => planFilesPruned(p)
       case None => planFiles()
     }
+
+  /** Slim planning collect of the files whose [[addsFlat]] row
+    * (`min.<c>` / `max.<c>` / `null_count.<c>` / `partition_values`)
+    * satisfies the FILE predicate `filePred`. Pruning runs IN SPARK over
+    * the metadata relation; only surviving AddFiles are collected to the
+    * driver — at 10⁷ files with a selective predicate, the difference
+    * between a handful of rows and hundreds of driver MB. */
+  private[graft] def planFilesPruned(
+      filePred: org.apache.spark.sql.Column): Seq[AddFile] = {
+    val survivors = addsFlat.where(filePred).select("path")
+    val out = slimAdds.join(survivors, Seq("path"), "left_semi")
+      .collect().toSeq.map(rowToAddFile)
+    Snapshot.driverFileRowsCollected.addAndGet(out.size)
+    out
+  }
 
   /** Like [[planFilesForPredicate]] but returns FULL rows (stats
     * included) when the pruned candidate set is small enough to hold
@@ -666,8 +676,9 @@ class Snapshot(
     * (stats strings, partition maps, DV descriptors — the heavyweight
     * per-file objects); the union plan itself still holds every
     * surviving path string, which any Spark scan must (delta-spark's
-    * file index has the same floor). Opt in table-wide via the session
-    * conf `spark.graft.scan.batchFiles` (0 = off), or call directly. */
+    * file index has the same floor). [[read]] engages it past
+    * [[Snapshot.AutoBatchFiles]] active files; call it directly to opt
+    * in below that. */
   def readBatched(
       pred: Option[org.apache.spark.sql.Column] = None,
       batchFiles: Int = 65536): DataFrame = {
@@ -688,27 +699,21 @@ class Snapshot(
     * listing), with partition columns re-attached from the log's
     * `partitionValues` and cast from their string encoding to the
     * declared type. */
-  def read(): DataFrame = {
-    // opt-in bounded planning for very-many-file tables: with
-    // spark.graft.scan.batchFiles=N set, reads stream the file index in
-    // N-file batches instead of one driver collect (see [[readBatched]])
-    val batch = confInt("spark.graft.scan.batchFiles", 0)
-    if (batch > 0) readBatched(None, batch)
-    else {
-      // AUTO-engaged bounded planning: when the version's .crc checksum
-      // (a free driver-side read — no Spark job on the hot path) says
-      // the active-file count exceeds the threshold, stream the file
-      // index in bounded batches instead of one driver collect, so the
-      // 10⁶⁺-file posture is the default rather than a flag users must
-      // know about. House-written tables always carry .crc; a legacy
-      // table without one keeps the direct path (the conf above remains
-      // its explicit opt-in). 0 disables.
-      val auto = confInt("spark.graft.scan.autoBatchFiles", 1000000)
-      val known = if (auto > 0) crcNumFiles else None
-      if (known.exists(_ > auto)) readBatched(None, 65536)
-      else readFiles(planFiles())
-    }
-  }
+  def read(): DataFrame = read(Snapshot.AutoBatchFiles)
+
+  /** [[read]] with the auto-batching threshold as a parameter, so a
+    * test can make a small table count as "very many files". */
+  private[delta] def read(autoBatchFiles: Long): DataFrame =
+    // AUTO-engaged bounded planning: when the version's .crc checksum
+    // (a free driver-side read — no Spark job on the hot path) says
+    // the active-file count exceeds the threshold, stream the file
+    // index in bounded batches instead of one driver collect, so the
+    // 10⁶⁺-file posture is the default rather than a flag users must
+    // know about. House-written tables always carry .crc; a legacy
+    // table without one keeps the direct path ([[readBatched]] remains
+    // its explicit opt-in).
+    if (crcNumFiles.exists(_ > autoBatchFiles)) readBatched(None, 65536)
+    else readFiles(planFiles())
 
   /** File count from the version's `.crc`, cached: the checksum of a
     * fixed (log, version) is immutable, and read() is a hot path — an
@@ -716,15 +721,6 @@ class Snapshot(
     * trips on every call. */
   private lazy val crcNumFiles: Option[Long] =
     Checksum.read(log, version).map(_.numFiles)
-
-  /** Parse an integer session conf with a clear error naming the key —
-    * an unguarded `.toInt` would surface a bare NumberFormatException
-    * on EVERY read, far from where the conf was set. */
-  private def confInt(key: String, default: Int): Int =
-    spark.conf.getOption(key).map { v =>
-      v.trim.toIntOption.getOrElse(throw new IllegalArgumentException(
-        s"session conf $key must be an integer, got '$v'"))
-    }.getOrElse(default)
 
   /** Scan a chosen subset of the active files (used by stats/partition
     * file pruning — see [[graft.delta.Skipping]]).
@@ -950,7 +946,7 @@ class Snapshot(
     * to the scan side. */
   private def applyDeletionVectors(
       dved: Seq[AddFile],
-      extraDataCols: Seq[StructField] = Nil): DataFrame = {
+      extraDataCols: Seq[StructField]): DataFrame = {
     val scanned = scanFiles(dved, withRowLineage = true, extraDataCols)
     val descs: Seq[(Seq[String], DeletionVectorDescriptor)] =
       dved.map(f => (pathCandidates(f), f.deletionVector.get))
@@ -999,6 +995,10 @@ object Snapshot {
     * for asserting that batched scan planning is genuinely bounded. */
   private[graft] val driverPlanPeakBatch =
     new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** Active-file count (from the `.crc`) above which [[Snapshot.read]]
+    * plans in bounded batches instead of one driver collect. */
+  private[graft] val AutoBatchFiles: Long = 1000000L
 
   /** Schema of the `add.stats` JSON document, derived from the table
     * schema: `minValues`/`maxValues` mirror the table's atomic columns

@@ -17,11 +17,18 @@ import scala.collection.mutable.ArrayBuffer
   *
   * Scale posture: data lands via a normal distributed `df.write.parquet`
   * into a staging dir under the table root, files are renamed into place
-  * (same filesystem → metadata-only), and stats come from ONE extra
-  * Spark pass grouped by file. Only the commit JSON itself is
-  * driver-side.
+  * (same filesystem → metadata-only), and stats are read from the
+  * written files' parquet footers (a Spark aggregation covers only
+  * the files whose footers cannot reproduce them). Only the commit
+  * JSON itself is driver-side.
   */
 object TransactionWriter {
+
+  /** Output file size the optimized write and auto-compaction aim at. */
+  private val TargetFileBytes = 128L * 1024 * 1024
+
+  /** Small files auto-compaction waits for before it folds them. */
+  private val AutoCompactMinFiles = 8
 
   /** Full-table overwrite (also creates the table at version 0). Returns
     * the committed version. */
@@ -343,6 +350,12 @@ object TransactionWriter {
         "column-mapped tables")
     val partCols: Seq[String] =
       partitionBy.orElse(prev.map(_.metadata.partitionColumns)).getOrElse(Nil)
+    // The table configuration this commit is written under: an explicit
+    // `configuration` (a create or a reconfiguring overwrite) wins over
+    // the table's.
+    val tableConf: Map[String, String] =
+      if (configuration.nonEmpty) configuration
+      else prev.map(_.metadata.configuration).getOrElse(Map.empty)
     // Generated columns: omitted ones are COMPUTED from their
     // expressions (a projection — no extra pass); explicitly-provided
     // ones get a null-safe-equality probe that rides the constraint
@@ -456,12 +469,9 @@ object TransactionWriter {
     // is checked against THAT configuration (its constraints are the
     // ones being committed).
     val checkedDf = {
-      val conf =
-        if (configuration.nonEmpty) configuration
-        else prev.map(_.metadata.configuration).getOrElse(Map.empty)
       val declaredNotNull = declaredSchema
         .orElse(prev.map(_.metadata.schema)).getOrElse(schema)
-      Constraints.enforced(df1, Constraints.of(conf), declaredNotNull, genProbes)
+      Constraints.enforced(df1, Constraints.of(tableConf), declaredNotNull, genProbes)
     }
 
     // Column mapping: data files, partition directories, and stats all
@@ -517,24 +527,17 @@ object TransactionWriter {
     // sources without stats report huge defaults). Partitioned tables
     // hash on the partition columns so each partition dir gets at most
     // the chosen task count of files.
-    val outDf = {
-      val owConf =
-        if (configuration.nonEmpty) configuration
-        else prev.map(_.metadata.configuration).getOrElse(Map.empty)
-      if (!owConf.get("delta.autoOptimize.optimizeWrite").contains("true")) writeDf
+    val outDf =
+      if (!tableConf.get("delta.autoOptimize.optimizeWrite").contains("true")) writeDf
       else {
-        val targetBytes = owConf.get("graft.optimizeWrite.targetFileBytes")
-          .flatMap(s => scala.util.Try(s.toLong).toOption)
-          .getOrElse(128L * 1024 * 1024)
         val est = writeDf.queryExecution.optimizedPlan.stats.sizeInBytes
           .min(BigInt(1L << 50)).toLong
-        val n = math.max(1L, math.min(est / math.max(1L, targetBytes) + 1,
+        val n = math.max(1L, math.min(est / TargetFileBytes + 1,
           100000L)).toInt
         if (writePartCols.nonEmpty)
           writeDf.repartition(n, writePartCols.map(col): _*)
         else writeDf.repartition(n)
       }
-    }
 
     // 1. Materialize data into a staging dir under the table root.
     val staging = new Path(log.rootPath, s".graft-staging-${java.util.UUID.randomUUID}")
@@ -544,7 +547,9 @@ object TransactionWriter {
         .parquet(staging.toString)
 
       // 2. Rename staged part files into place (keeps partition subdirs).
-      val staged = listParquet(fs, staging)
+      // Sorted by path, so the order of `moved` — and with it the row
+      // ids an append hands out — is the same on every run.
+      val staged = listParquet(fs, staging).sortBy(_.getPath.toString)
       val moved: Seq[MovedFile] = staged.map { st =>
         val rel = relativize(staging, st.getPath)
         val dest = new Path(log.rootPath, rel)
@@ -561,9 +566,7 @@ object TransactionWriter {
       // keyed physically, see Snapshot.addsFlat).
       val dataSchema = StructType(writeDf.schema.filterNot(f =>
         writePartCols.contains(f.name) || preservedCols.contains(f.name)))
-      val numIndexed = (if (configuration.nonEmpty) configuration
-        else prev.map(_.metadata.configuration).getOrElse(Map.empty))
-        .get("delta.dataSkippingNumIndexedCols")
+      val numIndexed = tableConf.get("delta.dataSkippingNumIndexedCols")
         .flatMap(s => scala.util.Try(s.toInt).toOption)
         .getOrElse(32)
       val stats = computeStats(log, dataSchema, moved, numIndexed)
@@ -685,15 +688,10 @@ object TransactionWriter {
             case None => declaredSchema.getOrElse(schema).json
           },
         partitionColumns = partCols,
-        configuration = {
-          val base =
-            if (configuration.nonEmpty) configuration
-            else prev.map(_.metadata.configuration).getOrElse(Map.empty)
-          createMapping match {
-            case Some((_, maxId)) =>
-              base + ("delta.columnMapping.maxColumnId" -> maxId.toString)
-            case None => base
-          }
+        configuration = createMapping match {
+          case Some((_, maxId)) =>
+            tableConf + ("delta.columnMapping.maxColumnId" -> maxId.toString)
+          case None => tableConf
         },
         createdTime = Some(prev.flatMap(_.metadata.createdTime).getOrElse(now))))
       // Identity columns: the high-water mark advances in the SAME
@@ -779,10 +777,7 @@ object TransactionWriter {
           deletionVector = f.deletionVector))
       }
       actions ++= extraActions
-      val effectiveConf =
-        if (configuration.nonEmpty) configuration
-        else prev.map(_.metadata.configuration).getOrElse(Map.empty)
-      val ict = effectiveConf.get("delta.enableInCommitTimestamps").contains("true")
+      val ict = tableConf.get("delta.enableInCommitTimestamps").contains("true")
       // Appends rebase unconditionally (blind append conflicts with
       // nothing); targeted rewrites rebase after a logical conflict
       // check; overwrites abort (their read set is the whole table).
@@ -797,13 +792,13 @@ object TransactionWriter {
       // delta.checkpointInterval: periodic checkpoints keep snapshot
       // resolution O(tail) forever (delta-spark defaults to every 10
       // commits; here opt-in via table property).
-      effectiveConf.get("delta.checkpointInterval")
+      tableConf.get("delta.checkpointInterval")
         .flatMap(s => scala.util.Try(s.toLong).toOption)
         .filter(_ > 0)
         .foreach { n =>
           if (committed > 0 && committed % n == 0) {
             // delta.checkpointPolicy=v2 selects the manifest+sidecar layout
-            if (effectiveConf.get("delta.checkpointPolicy").contains("v2"))
+            if (tableConf.get("delta.checkpointPolicy").contains("v2"))
               Maintenance.checkpointV2(log)
             else Maintenance.checkpoint(log)
           }
@@ -811,7 +806,7 @@ object TransactionWriter {
       // graft.logCompaction.interval=N: every N commits, write a minor
       // log-compaction file covering the last N — keeps replay of a
       // long checkpoint-to-head tail to O(tail/N) file opens.
-      effectiveConf.get("graft.logCompaction.interval")
+      tableConf.get("graft.logCompaction.interval")
         .flatMap(s => scala.util.Try(s.toLong).toOption)
         .filter(_ > 0)
         .foreach { n =>
@@ -824,19 +819,11 @@ object TransactionWriter {
       // compactSmall, so it converges: the OPTIMIZE it commits is
       // excluded from re-triggering, and once files fold past the
       // threshold the pass is a planning-only no-op. Thresholds:
-      // graft.autoCompact.targetFileBytes (128 MiB default) /
-      // minNumFiles (8).
+      // [[TargetFileBytes]] and [[AutoCompactMinFiles]].
       if (dataChange && operation != "OPTIMIZE" && operation != "REORG" &&
-          effectiveConf.get("delta.autoOptimize.autoCompact").contains("true")) {
-        val target = effectiveConf.get("graft.autoCompact.targetFileBytes")
-          .flatMap(s => scala.util.Try(s.toLong).toOption)
-          .getOrElse(128L * 1024 * 1024)
-        val minN = effectiveConf.get("graft.autoCompact.minNumFiles")
-          .flatMap(s => scala.util.Try(s.toInt).toOption)
-          .getOrElse(8)
-        Maintenance.compactSmall(log, targetFileBytes = target,
-          minSmallFiles = minN)
-      }
+          tableConf.get("delta.autoOptimize.autoCompact").contains("true"))
+        Maintenance.compactSmall(log, targetFileBytes = TargetFileBytes,
+          minSmallFiles = AutoCompactMinFiles)
       // graft.autoRefresh.indexes: after a data commit, incrementally
       // refresh every descriptor-bearing sidecar index — the index
       // follows the table without orchestration. Each refresh is
@@ -848,7 +835,7 @@ object TransactionWriter {
       // double-apply; the index just goes stale (and its probes
       // degrade safely).
       if (dataChange &&
-          effectiveConf.get("graft.autoRefresh.indexes").contains("true"))
+          tableConf.get("graft.autoRefresh.indexes").contains("true"))
         // deferDriftRebuild: a drifted ingest must not make its data
         // commit synchronously pay an O(corpus) quantizer retrain —
         // the gauge logs and the next explicit REFRESH retrains
@@ -1097,25 +1084,15 @@ object TransactionWriter {
     sb.toString
   }
 
-  /** numRecords / per-leaf min / max / nullCount for each written file,
-    * rendered as the `add.stats` JSON string. One Spark job grouped by
-    * `input_file_name()`.
-    *
-    * `numIndexedCols` (`delta.dataSkippingNumIndexedCols`, default 32,
-    * -1 = all): stats cover only the first N leaf columns in schema
-    * order — on a 1000-column table, per-file min/max on every column
-    * bloats the log and the write-side aggregation for columns nobody
-    * filters on. Identity columns are always included regardless (the
-    * same-commit high-water-mark advance reads their max from these
-    * stats). */
-  /** Per-file stats, footer-first: every parquet file the write job
-    * just produced already carries per-row-group min/max/null-count
-    * statistics in its FOOTER — reading those is a metadata-sized
-    * operation, where the previous implementation re-read the whole
-    * written data with a second Spark aggregation job (measured at
-    * roughly the cost of the write itself on every commit — the single
-    * largest fixed per-commit overhead in the matview/mutation
-    * lifecycle gates). Files whose footer cannot reproduce the exact
+  /** Per-file stats (numRecords / per-leaf min / max / nullCount,
+    * rendered as the `add.stats` JSON string), footer-first: every
+    * parquet file the write job just produced already carries
+    * per-row-group min/max/null-count statistics in its FOOTER —
+    * reading those is a metadata-sized operation, where the previous
+    * implementation re-read the whole written data with a second Spark
+    * aggregation job (measured at roughly the cost of the write itself
+    * on every commit — the single largest fixed per-commit overhead in
+    * the matview/mutation lifecycle gates). Files whose footer cannot reproduce the exact
     * Spark-computed values fall back PER FILE to the aggregation pass:
     * unsafe leaf types (INT96 timestamps carry no usable stats;
     * decimals), dropped stats (parquet-mr omits binary min/max past
@@ -1124,7 +1101,15 @@ object TransactionWriter {
     * SAME [[renderStats]], so the emitted JSON is bit-identical by
     * construction whichever path produced it (string order is safe:
     * parquet binary stats compare unsigned bytes, which IS Spark's
-    * UTF8_BINARY collation). */
+    * UTF8_BINARY collation).
+    *
+    * `numIndexedCols` (`delta.dataSkippingNumIndexedCols`, default 32,
+    * -1 = all): stats cover only the first N leaf columns in schema
+    * order — on a 1000-column table, per-file min/max on every column
+    * bloats the log and the write-side aggregation for columns nobody
+    * filters on. Identity columns are always included regardless (the
+    * same-commit high-water-mark advance reads their max from these
+    * stats). */
   private def computeStats(
       log: DeltaLog, dataSchema: StructType, moved: Seq[MovedFile],
       numIndexedCols: Int = -1): Map[String, String] = {

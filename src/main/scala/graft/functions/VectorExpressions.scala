@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.graftshims.{DotProduct, L2Norm, SqlShims}
+import org.apache.spark.sql.graftshims.{DotProduct, L2Norm}
 import org.apache.spark.sql.graftshims.SqlShims.{column, expression}
 
 /** Public facade over the native Catalyst vector expressions

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Duplicate-handling operators as pure DataFrame transforms.
   *
@@ -15,11 +16,12 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  private[graft] def requireCols(df: DataFrame, cols: Seq[String], what: String): Unit = {
+  private[graft] def requireCols(
+      schema: StructType, cols: Seq[String], what: String): Unit = {
     require(cols != null && cols.nonEmpty, s"$what must be a non-empty list of columns")
-    val missing = cols.filterNot(df.columns.contains)
-    require(missing.isEmpty,
-      s"$what ${missing.mkString(", ")} not found in table columns ${df.columns.mkString(", ")}")
+    val missing = cols.filterNot(schema.fieldNames.contains)
+    require(missing.isEmpty, s"$what ${missing.mkString(", ")} not found in " +
+      s"table columns ${schema.fieldNames.mkString(", ")}")
   }
 
   /** Delete EVERY row of every duplicate group — no survivor (reference:
@@ -31,7 +33,7 @@ object Dedup {
     * is small — the common case at scale, where the full-row shuffle of
     * a window-count plan would dominate. */
   def killDuplicates(df: DataFrame, duplicationColumns: Seq[String]): DataFrame = {
-    requireCols(df, duplicationColumns, "duplication_columns")
+    requireCols(df.schema, duplicationColumns, "duplication_columns")
     val dupKeys = df.groupBy(duplicationColumns.map(col): _*)
       .agg(count(lit(1)).as("__cnt"))
       .where(col("__cnt") > 1)
@@ -47,7 +49,7 @@ object Dedup {
     * parity). */
   def dropDuplicatesOrdered(
       df: DataFrame, duplicationColumns: Seq[String], orderBy: Seq[Column]): DataFrame = {
-    requireCols(df, duplicationColumns, "duplication_columns")
+    requireCols(df.schema, duplicationColumns, "duplication_columns")
     require(orderBy.nonEmpty, "orderBy must be non-empty for a deterministic survivor")
     val w = Window.partitionBy(duplicationColumns.map(col): _*).orderBy(orderBy: _*)
     df.withColumn("__rn", row_number().over(w))
@@ -74,7 +76,7 @@ object Dedup {
   def dropDuplicatesOrderedSalted(
       df: DataFrame, duplicationColumns: Seq[String], orderBy: Seq[Column],
       salts: Int = 16): DataFrame = {
-    requireCols(df, duplicationColumns, "duplication_columns")
+    requireCols(df.schema, duplicationColumns, "duplication_columns")
     require(orderBy.nonEmpty, "orderBy must be non-empty for a deterministic survivor")
     require(salts >= 2, s"salts must be >= 2, got $salts")
     val dupCols = duplicationColumns.map(col)
@@ -158,7 +160,7 @@ object Dedup {
   def dropDuplicatesPkey(
       df: DataFrame, primaryKey: String, duplicationColumns: Seq[String]): DataFrame = {
     require(primaryKey != null && primaryKey.nonEmpty, "primary_key must be a non-empty column name")
-    requireCols(df, duplicationColumns, "duplication_columns")
+    requireCols(df.schema, duplicationColumns, "duplication_columns")
     require(df.columns.contains(primaryKey),
       s"primary key $primaryKey not found in table columns ${df.columns.mkString(", ")}")
     require(!duplicationColumns.contains(primaryKey),

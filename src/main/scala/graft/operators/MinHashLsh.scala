@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.TextFunctions
 import graft.queries.Queries.{MinhashA, MinhashB, MinhashP}
 
 /** MinHash + banded LSH near-duplicate detection, DataFrame-native.
@@ -110,19 +109,6 @@ object MinHashLsh {
     sig.select(col(idCol), posexplode(bandKeys).as(Seq("band", "k")))
   }
 
-  /** The bucket cap in force: an explicit argument always wins; the
-    * default 0 defers to the session conf
-    * `spark.graft.lsh.maxBucketSize`, so a production session can arm
-    * the degenerate-bucket skew guard fleet-wide without touching call
-    * sites (the capped semantics are gated end-to-end by
-    * q_minhash_dedup_capped); a NEGATIVE argument forces the cap off
-    * even when the conf is set. Conf absent or 0 = off — candidate
-    * generation is exact. */
-  private[graft] def effectiveCap(df: DataFrame, explicit: Int): Int =
-    if (explicit > 0) explicit
-    else if (explicit < 0) 0
-    else df.sparkSession.conf.get("spark.graft.lsh.maxBucketSize", "0").toInt
-
   /** Candidate pairs: docs sharing any band bucket (deduplicated).
     *
     * `maxBucketSize` is the skew guard: a degenerate bucket (e.g. every
@@ -130,9 +116,9 @@ object MinHashLsh {
     * m²/2 pairs and concentrates them in ONE join task. Buckets above
     * the cap are dropped from CANDIDATE GENERATION (their members still
     * pair through their other, selective bands) — the standard
-    * LSH-at-scale mitigation. 0 defers to the
-    * `spark.graft.lsh.maxBucketSize` session conf (see
-    * [[effectiveCap]]); negative forces the cap off. */
+    * LSH-at-scale mitigation (gated end-to-end by
+    * q_minhash_dedup_capped). A cap ≤ 0 (the default) is off —
+    * candidate generation is exact. */
   def candidatePairs(
       buckets: DataFrame, idCol: String, maxBucketSize: Int = 0): DataFrame = {
     // The self-join below references the bucket relation twice, and
@@ -142,13 +128,12 @@ object MinHashLsh {
     // in exactly this self-join shape, recomputing the kernel per
     // reference — see Queries.cachedStagesQuery)
     val mat = buckets.localCheckpoint()
-    val cap = effectiveCap(buckets, maxBucketSize)
     val capped =
-      if (cap <= 0) mat
+      if (maxBucketSize <= 0) mat
       else {
         val sizes = mat.groupBy("band", "k")
           .agg(count(lit(1)).as("__bsz"))
-          .where(col("__bsz") <= cap)
+          .where(col("__bsz") <= maxBucketSize)
           .select("band", "k")
         mat.join(sizes, Seq("band", "k"))
       }
@@ -272,10 +257,9 @@ object MinHashLsh {
       threshold: Double = 0.9, maxBucketSize: Int = 0,
       anchorK: Int = AnchorK): DataFrame = {
     val hashed = hashedShingles(df, idCol, textCol).localCheckpoint()
-    val cap = effectiveCap(df, maxBucketSize)
     val cand = candidatePairs(
         bandBuckets(withSignature(hashed), idCol), idCol, maxBucketSize)
-      .unionByName(anchorCandidates(hashed, idCol, anchorK, cap))
+      .unionByName(anchorCandidates(hashed, idCol, anchorK, maxBucketSize))
       .distinct()
     val ha = hashed.select(col(idCol).as("id_a"), col("hs").as("hs_a"))
     val hb = hashed.select(col(idCol).as("id_b"), col("hs").as("hs_b"))
@@ -324,7 +308,7 @@ object MinHashLsh {
     val hNew = hashedBatch.getOrElse(
       hashedShingles(newBatch, idCol, textCol).localCheckpoint())
     containmentCrossPairs(hNew, idCol, threshold, anchorK,
-      effectiveCap(prior, maxBucketSize), broadcastKeys,
+      maxBucketSize, broadcastKeys,
       hashedShingles(prior, idCol, textCol),
       ids => hashedShingles(
         // id semi-join BEFORE the kernel: the verify pass re-reads the
@@ -443,7 +427,7 @@ object MinHashLsh {
       threshold: Double = 0.5, broadcastKeys: Boolean = true,
       maxBucketSize: Int = 0, hashedBatch: Option[DataFrame] = None): DataFrame =
     dedupAgainstPrior(newBatch, idCol, textCol, threshold, broadcastKeys,
-      effectiveCap(prior, maxBucketSize),
+      maxBucketSize,
       newKeys => priorBands(prior, idCol, textCol)
         .join(newKeys, Seq("band", "k"), "left_semi"),
       hashedBatch)
@@ -476,8 +460,8 @@ object MinHashLsh {
     * (so an INDEXED prior — [[graft.delta.LshIndex.dedupBatch]] — and
     * the direct scan share every line of candidate generation and
     * Jaccard verification; the prior builder must semi-join the key
-    * set itself, BEFORE any exchange). `cap` is the already-resolved
-    * bucket cap (callers run [[effectiveCap]] against their prior). */
+    * set itself, BEFORE any exchange). `cap` is the bucket cap (≤ 0 =
+    * off). */
   private[graft] def dedupAgainstPrior(
       newBatch: DataFrame, idCol: String, textCol: String,
       threshold: Double, broadcastKeys: Boolean, cap: Int,

@@ -1,7 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Classifier, IncrementalAgg, SkewJoin}
+import graft.operators.{Classifier, SkewJoin}
 
 /** Self-checking demo of the model-based curation family: NB source
   * classifier (held-out confusion + accuracy), hashing-trick features,

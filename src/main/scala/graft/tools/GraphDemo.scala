@@ -67,7 +67,7 @@ object GraphDemo {
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       val adj = edgeList.groupBy(_._1).view.mapValues(_.map(_._2).toSet)
         .toMap.withDefaultValue(Set.empty[Long])
-      var brute = scala.collection.mutable.Map.empty[Long, Long]
+      val brute = scala.collection.mutable.Map.empty[Long, Long]
         .withDefaultValue(0L)
       for ((a, b) <- edgeList; c <- adj(b) if adj(a)(c)) {
         brute(a) += 1; brute(b) += 1; brute(c) += 1

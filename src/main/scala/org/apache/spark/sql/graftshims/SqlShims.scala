@@ -376,7 +376,6 @@ case class MinHashSignatures(
     val x = ctx.freshName("x")
     val mins = ctx.freshName("mins")
     val any = ctx.freshName("any")
-    val out = ctx.freshName("out")
     nullSafeCodeGen(ctx, ev, v => {
       s"""
          |int $n = $v.numElements();

@@ -82,21 +82,12 @@ class DedupIncrementalSpec extends SparkTestBase {
       .count() == 0, "over-cap degenerate block must contribute no pairs")
     // the rest of the corpus still pairs exactly as before
     assertSameRows(capped, uncapped, "cap drops ONLY the degenerate block")
-    // SESSION CONF: spark.graft.lsh.maxBucketSize arms the same guard
-    // with no code change at the call site (explicit argument 0 defers
-    // to the conf); a NEGATIVE explicit argument forces the cap off
-    // even with the conf set
-    spark.conf.set("spark.graft.lsh.maxBucketSize", "16")
-    try {
-      val viaConf = graft.operators.MinHashLsh
-        .nearDupPairs(flooded, "doc_id", "text", 0.5)
-      assertSameRows(viaConf, capped, "conf-armed cap ≡ explicit cap")
-      val forcedOff = graft.operators.MinHashLsh
-        .nearDupPairs(flooded, "doc_id", "text", 0.5, maxBucketSize = -1)
-      assert(forcedOff.where(
-        col("id_a") >= 9000000L && col("id_b") >= 9000000L).count() > 0,
-        "negative cap must override the conf and keep the block's pairs")
-    } finally spark.conf.unset("spark.graft.lsh.maxBucketSize")
+    // a cap ≤ 0 is off: the degenerate block keeps its pairs
+    val forcedOff = graft.operators.MinHashLsh
+      .nearDupPairs(flooded, "doc_id", "text", 0.5, maxBucketSize = -1)
+    assert(forcedOff.where(
+      col("id_a") >= 9000000L && col("id_b") >= 9000000L).count() > 0,
+      "a negative cap must leave the block's pairs in")
   }
 
   test("SQL surface: bloom_filter_agg + might_contain round-trip") {

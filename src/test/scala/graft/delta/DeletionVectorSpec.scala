@@ -156,15 +156,14 @@ class DeletionVectorSpec extends SparkTestBase {
     // the fraction check normally engages only above its 64k-row floor
     // (below it either route is fine and the table-rows agg is skipped);
     // drop the floor so the 100-row scenario exercises the cap
-    spark.conf.set("spark.graft.dv.fractionCheckMinRows", "0")
-    try {
+    val noFloor = Mutations.DvLimits(fractionCheckMinRows = 0L)
     val log = DeltaLog.forPath(spark, dir)
     TransactionWriter.overwrite(log,
       (0 until 100).map(i => (i.toLong, s"r_$i")).toDF("id", "s").repartition(2))
     // deleting 90% of rows exceeds the default 0.5 matched-fraction cap:
     // the DV path must refuse (no driver bitmap) and route through the
     // targeted rewrite — same visible result, no deletion vector written
-    val v1 = Mutations.deleteWithDv(log, col("id") >= 10L)
+    val v1 = Mutations.deleteWithDv(log, col("id") >= 10L, noFloor)
     assert(v1 == 1L)
     val snap1 = log.snapshot
     assert(snap1.read().select("id").as[Long].collect().sorted.toSeq ==
@@ -176,7 +175,7 @@ class DeletionVectorSpec extends SparkTestBase {
       "broad delete must rewrite the touched files")
 
     // a selective delete on the same table still takes the DV path
-    val v2 = Mutations.deleteWithDv(log, col("id") === 3L)
+    val v2 = Mutations.deleteWithDv(log, col("id") === 3L, noFloor)
     assert(v2 == 2L)
     val snap2 = log.snapshot
     assert(snap2.read().select("id").as[Long].collect().sorted.toSeq ==
@@ -187,18 +186,15 @@ class DeletionVectorSpec extends SparkTestBase {
       "selective DV delete must not rewrite data files")
 
     // the absolute cap works too (set lower than the match count)
-    spark.conf.set("spark.graft.dv.maxMatchedRows", "1")
-    try {
-      val before = log.snapshot.activeFiles
-        .count(_.deletionVector.exists(_.cardinality > 0))
-      Mutations.deleteWithDv(log, col("id").isin(4L, 5L))
-      val after = log.snapshot
-      assert(after.read().select("id").as[Long].collect().sorted.toSeq ==
-        Seq(0L, 1L, 2L, 6L, 7L, 8L, 9L))
-      assert(after.activeFiles.count(_.deletionVector.exists(_.cardinality > 0))
-        <= before, "capped delete must not add new deletion vectors")
-    } finally spark.conf.unset("spark.graft.dv.maxMatchedRows")
-    } finally spark.conf.unset("spark.graft.dv.fractionCheckMinRows")
+    val before = log.snapshot.activeFiles
+      .count(_.deletionVector.exists(_.cardinality > 0))
+    Mutations.deleteWithDv(log, col("id").isin(4L, 5L),
+      noFloor.copy(maxMatchedRows = 1L))
+    val after = log.snapshot
+    assert(after.read().select("id").as[Long].collect().sorted.toSeq ==
+      Seq(0L, 1L, 2L, 6L, 7L, 8L, 9L))
+    assert(after.activeFiles.count(_.deletionVector.exists(_.cardinality > 0))
+      <= before, "capped delete must not add new deletion vectors")
   }
 
   test("updateWithDv: no rewrite of old files, updated rows in new files") {

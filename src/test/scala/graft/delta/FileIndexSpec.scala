@@ -172,8 +172,7 @@ class FileIndexSpec extends SparkTestBase {
 
   test("readBatched composes sub-scans identical to read()") {
     // executable scale: a real 64-file table read in 16-file batches
-    // must return exactly read()'s rows (DVs included), both via the
-    // direct call and via the spark.graft.scan.batchFiles conf
+    // must return exactly read()'s rows (DVs included)
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-fidx-rb").resolve("t").toString
     val log = DeltaLog.forPath(spark, dir)
@@ -187,12 +186,6 @@ class FileIndexSpec extends SparkTestBase {
     val got = snap.readBatched(batchFiles = 16)
       .select("id").as[Long].collect().sorted.toSeq
     assert(got == want, "batched scan diverged from the plain scan")
-    spark.conf.set("spark.graft.scan.batchFiles", "16")
-    try {
-      val viaConf = DeltaLog.forPath(spark, dir).snapshot.read()
-        .select("id").as[Long].collect().sorted.toSeq
-      assert(viaConf == want)
-    } finally spark.conf.unset("spark.graft.scan.batchFiles")
     // predicate-pruned batched scan: only matching files feed the
     // union, rows still equal the plain pruned read
     val pred = Some(col("size_bytes") > 0L)
@@ -216,28 +209,18 @@ class FileIndexSpec extends SparkTestBase {
     assert(Checksum.read(log, snap.version).exists(_.numFiles == 64L),
       "precondition: the write path must have produced a .crc")
     val want = snap.read().select("id").as[Long].collect().sorted.toSeq
-    spark.conf.set("spark.graft.scan.autoBatchFiles", "32")
-    try {
-      Snapshot.driverPlanPeakBatch.set(0L)
-      val got = DeltaLog.forPath(spark, dir).snapshot.read()
-        .select("id").as[Long].collect().sorted.toSeq
-      assert(got == want, "auto-batched scan diverged from the plain scan")
-      val peak = Snapshot.driverPlanPeakBatch.get()
-      assert(peak > 0L && peak <= 65536L,
-        s"auto path did not engage batched planning (peak batch $peak)")
-      // below the threshold the direct path is kept (no batched gauge)
-      spark.conf.set("spark.graft.scan.autoBatchFiles", "100000")
-      Snapshot.driverPlanPeakBatch.set(0L)
-      DeltaLog.forPath(spark, dir).snapshot.read().count()
-      assert(Snapshot.driverPlanPeakBatch.get() == 0L,
-        "direct path must not batch below the threshold")
-      // malformed conf values fail with a clear error naming the key
-      spark.conf.set("spark.graft.scan.autoBatchFiles", "lots")
-      val err = intercept[IllegalArgumentException] {
-        DeltaLog.forPath(spark, dir).snapshot.read()
-      }
-      assert(err.getMessage.contains("spark.graft.scan.autoBatchFiles"))
-    } finally spark.conf.unset("spark.graft.scan.autoBatchFiles")
+    Snapshot.driverPlanPeakBatch.set(0L)
+    val got = DeltaLog.forPath(spark, dir).snapshot.read(autoBatchFiles = 32L)
+      .select("id").as[Long].collect().sorted.toSeq
+    assert(got == want, "auto-batched scan diverged from the plain scan")
+    val peak = Snapshot.driverPlanPeakBatch.get()
+    assert(peak > 0L && peak <= 65536L,
+      s"auto path did not engage batched planning (peak batch $peak)")
+    // below the threshold the direct path is kept (no batched gauge)
+    Snapshot.driverPlanPeakBatch.set(0L)
+    DeltaLog.forPath(spark, dir).snapshot.read(autoBatchFiles = 100000L).count()
+    assert(Snapshot.driverPlanPeakBatch.get() == 0L,
+      "direct path must not batch below the threshold")
   }
 
   test("targeted DELETE plans via stats pruning: bounded collect, 1 of 100k files touched") {

@@ -359,24 +359,22 @@ class MaintenanceSpec extends SparkTestBase {
   test("autoCompact folds accumulated small files after a data commit") {
     val log = freshLog()
     TransactionWriter.overwrite(log, Seq((0L, "seed")).toDF("n", "s").coalesce(1),
-      configuration = Map(
-        "delta.autoOptimize.autoCompact" -> "true",
-        "graft.autoCompact.minNumFiles" -> "4"))
-    (1 to 2).foreach(i => Maintenance.append(log,
+      configuration = Map("delta.autoOptimize.autoCompact" -> "true"))
+    (1 to 6).foreach(i => Maintenance.append(log,
       Seq((i.toLong, s"v$i")).toDF("n", "s").coalesce(1)))
-    // 3 files < minNumFiles: no compaction yet
-    assert(log.snapshot.activeFiles.size == 3)
-    Maintenance.append(log, Seq((3L, "v3")).toDF("n", "s").coalesce(1))
-    // 4th small file crossed the floor -> the append auto-compacted
+    // 7 files < the floor of 8: no compaction yet
+    assert(log.snapshot.activeFiles.size == 7)
+    Maintenance.append(log, Seq((7L, "v7")).toDF("n", "s").coalesce(1))
+    // 8th small file crossed the floor -> the append auto-compacted
     val snap = log.snapshot
     assert(snap.activeFiles.size == 1, s"got ${snap.activeFiles.map(_.path)}")
-    assert(snap.read().count() == 4)
+    assert(snap.read().count() == 8)
     val lastOp = Maintenance.history(log)
       .orderBy(org.apache.spark.sql.functions.desc("version"))
       .select("operation").collect().head.getString(0)
     assert(lastOp == "OPTIMIZE", s"auto-compaction must commit OPTIMIZE, got $lastOp")
     // converged: the next append folds nothing (1 big + 1 new < floor)
-    Maintenance.append(log, Seq((4L, "v4")).toDF("n", "s").coalesce(1))
+    Maintenance.append(log, Seq((8L, "v8")).toDF("n", "s").coalesce(1))
     assert(log.snapshot.activeFiles.size == 2)
   }
 

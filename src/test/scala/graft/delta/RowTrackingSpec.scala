@@ -106,4 +106,23 @@ class RowTrackingSpec extends SparkTestBase {
     Maintenance.compact(log)
     ids(log).foreach { case (id, rid, _) => assert(before(id) == rid) }
   }
+
+  test("a multi-file append hands out row ids in file path order") {
+    // the RowTrackingDemo append: two rows land in two files, and the
+    // ids follow the files' sorted paths, not the order the file system
+    // lists the staging directory in — the same append gets the same
+    // ids on every run
+    val log = freshLog()
+    TransactionWriter.overwrite(log,
+      (0L until 6L).map(i => (i, s"name_$i")).toDF("id", "name").repartition(2)) // v0
+    RowTracking.enable(log)                                                       // v1
+    TransactionWriter.append(log,
+      Seq((10L, "late"), (11L, "later")).toDF("id", "name"))                      // v2
+    val added = log.snapshot.activeFiles
+      .filter(_.defaultRowCommitVersion.contains(2L)).sortBy(_.path)
+    assert(added.size == 2, s"precondition: one file per row, got ${added.map(_.path)}")
+    assert(added.map(_.baseRowId) == Seq(Some(6L), Some(7L)))
+    assert(ids(log).filter(_._1 >= 10L).map(r => r._1 -> r._2) ==
+      Seq(10L -> 6L, 11L -> 7L))
+  }
 }
