@@ -49,9 +49,18 @@ import org.apache.spark.sql.graftshims.SqlShims
   */
 object BloomIndex {
 
+  /** Not row-keyed: a filter describes a file's PHYSICAL rows, so it
+    * stays a superset under a deletion vector and DV'd files are
+    * covered; one filter row per file, no entry-count invariant. */
+  private[delta] val kind = IncrementalSidecar.Kind("bloom",
+    rowKeyed = false)({ case (log, Seq(c), _) => buildIncremental(log, c) })
+
   def indexDir(log: DeltaLog, column: String): String =
-    new org.apache.hadoop.fs.Path(
-      log.rootPath, s"_graft_index/bloom_$column").toString
+    kind.indexDir(log, Seq(column))
+
+  private def validate(snap: Snapshot, column: String): Unit =
+    IncrementalSidecar.validate(snap, Seq(column), "partition pruning " +
+      "already answers equality on it; a Bloom index adds nothing")
 
   /** Build (or rebuild) the index for `column` at the current
     * snapshot. `expectedItemsPerFile` sizes each filter (Spark's
@@ -60,29 +69,19 @@ object BloomIndex {
     * numRecords (falls back to 1M when stats are absent).
     * Returns the indexed snapshot version. */
   def build(log: DeltaLog, column: String,
-      expectedItemsPerFile: Long = 0L): Long = {
-    val snap = log.snapshot
-    require(snap.schema.fieldNames.contains(column),
-      s"column $column not in table schema " +
-        snap.schema.fieldNames.mkString("[", ", ", "]"))
-    require(!snap.metadata.partitionColumns.contains(column),
-      s"$column is a partition column — partition pruning already " +
-        "answers equality on it; a Bloom index adds nothing")
-    val files = snap.planFiles()
-    if (files.isEmpty) return snap.version
-    Sidecar.writeMeta(log.spark, indexDir(log, column), "bloom", Seq(column))
-    Sidecar.swapIn(log.spark, indexDir(log, column),
+      expectedItemsPerFile: Long = 0L): Long =
+    IncrementalSidecar.build(log, kind, Seq(column), validate(_, column),
+      layout = identity) { (snap, files) =>
       scanEntries(log, snap, files, column,
-        perFileItems(snap, expectedItemsPerFile)))
-    snap.version
-  }
+        perFileItems(snap, expectedItemsPerFile))
+    }
 
   /** The live sidecar relation (file_path, n_rows, bloom, version),
     * None when no index is built — the read path every consumer
     * (probe, incremental refresh, gate assertions) shares, resolved
     * through the generation pointer ([[Sidecar.read]]). */
   def entries(log: DeltaLog, column: String): Option[DataFrame] =
-    Sidecar.read(log.spark, indexDir(log, column))
+    kind.entries(log, Seq(column))
 
   private def perFileItems(snap: Snapshot, expected: Long): Long =
     if (expected > 0) expected
@@ -92,88 +91,53 @@ object BloomIndex {
   /** ONE distributed scan of `files` → (file_path, n_rows, bloom,
     * version) entries — the build primitive the full AND incremental
     * paths share, so both hash bit-identically by construction.
-    * PHYSICAL rows: read the parquet directly (physical column name
-    * under column mapping), so DV-masked rows stay in the filter and
-    * RESTORE can never resurface a row the filter doesn't know. */
+    * PHYSICAL rows ([[IncrementalSidecar.physicalRead]]), so DV-masked
+    * rows stay in the filter and RESTORE can never resurface a row the
+    * filter doesn't know. */
   private def scanEntries(log: DeltaLog, snap: Snapshot,
-      files: Seq[AddFile], column: String, perFile: Long): DataFrame = {
-    val phys = snap.physicalNameOf(column)
-    val partPhys = snap.metadata.partitionColumns.map(snap.physicalNameOf).toSet
-    val dataSchema = org.apache.spark.sql.types.StructType(
-      snap.physicalSchema.filterNot(f => partPhys.contains(f.name)))
-    log.spark.read.schema(dataSchema)
-      .parquet(files.map(snap.absolutePath): _*)
-      .groupBy(input_file_name().as("file_path"))
+      files: Seq[AddFile], column: String, perFile: Long): DataFrame =
+    IncrementalSidecar.physicalRead(log, snap, files, Seq(column))
+      .groupBy(col("file_path"))
       .agg(count(lit(1)).as("n_rows"),
-        SqlShims.bloomFilterAgg(xxhash64(col(phys)), perFile).as("bloom"))
+        SqlShims.bloomFilterAgg(xxhash64(col(column)), perFile).as("bloom"))
       .withColumn("version", lit(snap.version))
-  }
 
-  /** Incrementally extend the index to the current snapshot: scan ONLY
-    * the active files the sidecar does not cover yet, keep every
-    * still-active existing entry VERBATIM (its filter bytes and build
-    * version untouched — the observable that proves covered files were
-    * not rescanned), drop entries whose file left the active set, and
-    * atomically swap the merged relation in. The same economics as
-    * incremental clustering, with the sidecar itself as the watermark
-    * (coverage is per-file): refreshing after a 1% ingest scans 1%,
-    * not the table. No sidecar yet → full [[build]].
+  /** Incrementally extend the index to the current snapshot
+    * ([[IncrementalSidecar.refresh]]): scan ONLY the active files the
+    * sidecar does not cover yet, keep every still-active existing entry
+    * VERBATIM (its filter bytes and build version untouched — the
+    * observable that proves covered files were not rescanned), drop
+    * entries whose file left the active set, and atomically swap the
+    * merged relation in. The same economics as incremental clustering,
+    * with the sidecar itself as the watermark (coverage is per-file):
+    * refreshing after a 1% ingest scans 1%, not the table. No sidecar
+    * yet → full [[build]]; an idle refresh publishes nothing.
+    *
+    * A file rewritten by a dataChange=false commit gets the MERGE of
+    * its source files' filters (row-set superset ⇒ false positives
+    * only, never a lost value — the same superset contract the
+    * physical-row build has) and its n_rows from the add's own log
+    * stats; no data bytes read.
     *
     * Swap discipline: the merged relation writes as a COMPLETE new
-    * generation and a tiny pointer file re-points atomically
-    * ([[Sidecar.swapIn]] — delete/rename results checked, previous
-    * generation retained through the swap), so a probe racing the
-    * refresh reads either the old or the new complete generation —
-    * never a partial directory — and the worst race outcome is the
-    * conservative full candidate set, never wrong rows (the index is
-    * advisory by design). Driver footprint is one path-string set, the
-    * same order as the probe path's negative-set collect.
+    * generation behind an atomically re-pointed pointer file
+    * ([[Sidecar.swapIn]]), so a probe racing the refresh reads either
+    * the old or the new complete generation — never a partial
+    * directory — and the worst race outcome is the conservative full
+    * candidate set, never wrong rows (the index is advisory by design).
     * Returns the indexed snapshot version. */
   def buildIncremental(log: DeltaLog, column: String,
-      expectedItemsPerFile: Long = 0L): Long = {
-    val spark = log.spark
-    val snap = log.snapshot
-    val dir = indexDir(log, column)
-    val existing: DataFrame = entries(log, column)
-      .map(_.select("file_path", "n_rows", "bloom", "version"))
-      .getOrElse(return build(log, column, expectedItemsPerFile))
-    val (storedRaw, since) = IncrementalSidecar.storedSummary(
-      spark, dir, existing, Set.empty)
-    // per-path scan versions (memoized summary read): remapped entries
-    // keep the MAX of their sources' versions — the same no-rescan
-    // observable the row-keyed sidecars expose
-    val storedVersions: Map[String, Long] =
-      Sidecar.readCoverageFull(spark, dir)
-        .map(_.map { case (p, (v, _)) => p -> v }).getOrElse(Map.empty)
-    val cov = IncrementalSidecar.coverage(snap, storedRaw,
-      coverDvFiles = true)
-    if (!cov.changed) return snap.version
-    // compaction remap — the Bloom spelling: a file rewritten by a
-    // dataChange=false commit gets the MERGE of its source files'
-    // filters (row-set superset ⇒ false positives only, never a lost
-    // value — the same superset contract the physical-row build has)
-    // and its n_rows from the add's own log stats; no data bytes read
-    val (remapped, fellBack) = remapEntries(log, snap, existing,
-      IncrementalSidecar.remapGroups(log, snap, cov.missing,
-        cov.coveredNorm, storedRaw, since), storedVersions)
-    val scanFiles = fellBack
-    val newEntries =
-      if (scanFiles.isEmpty) existing.limit(0)
-      else scanEntries(log, snap, scanFiles, column,
-        perFileItems(snap, expectedItemsPerFile))
-    // keep-filter as an exact broadcast semi-join on the STORED path
-    // spellings (normalization happens once per distinct path on the
-    // driver, not per entry row in a UDF; for Bloom the entry relation
-    // is file-count-sized anyway, but the pure-built-in spelling keeps
-    // the plan UDF-free)
-    val merged = IncrementalSidecar
-      .keepStored(spark, existing, cov.liveStored)
-      .unionByName(remapped.getOrElse(existing.limit(0)))
-      .unionByName(newEntries)
-    Sidecar.repairMeta(spark, dir, "bloom", Seq(column))
-    Sidecar.swapIn(spark, dir, merged)
-    snap.version
-  }
+      expectedItemsPerFile: Long = 0L): Long =
+    IncrementalSidecar.refresh(log, kind, Seq(column),
+      validate = validate(_, column),
+      build = () => build(log, column, expectedItemsPerFile),
+      scan = (snap, _, files) => scanEntries(log, snap, files, column,
+        perFileItems(snap, expectedItemsPerFile)),
+      remap = (snap, entries, groups, _) =>
+        remapEntries(log, snap, entries, groups,
+          Sidecar.readCoverage(log.spark, indexDir(log, column))
+            .getOrElse(Map.empty)),
+      layout = identity)
 
   /** Bloom remap executor: per group, ONE distributed merge of the
     * source entries' filters (executor-side pairwise `mergeInPlace`
@@ -181,19 +145,19 @@ object BloomIndex {
     * the driver beyond the final result) shared by every new file the
     * commit added; n_rows comes from the add's `numRecords` stat. A
     * group whose adds lack stats, or whose filters refuse to merge
-    * (sizing changed between builds), falls back to the scan. */
+    * (sizing changed between builds), falls back to the scan. Merged
+    * entries keep the MAX of their sources' scan versions
+    * (`storedVersions`) — the same no-rescan observable the row-keyed
+    * sidecars expose. */
   private def remapEntries(log: DeltaLog, snap: Snapshot,
-      entries: DataFrame,
-      planned: (Seq[IncrementalSidecar.RemapGroup], Seq[AddFile]),
+      entries: DataFrame, groups: Seq[IncrementalSidecar.RemapGroup],
       storedVersions: Map[String, Long])
       : (Option[DataFrame], Seq[AddFile]) = {
-    val (groups, leftover) = planned
-    if (groups.isEmpty) return (None, leftover)
+    if (groups.isEmpty) return (None, Nil)
     val spark = log.spark
     import spark.implicits._
     var out: Option[DataFrame] = None
     val fallback = scala.collection.mutable.ArrayBuffer.empty[AddFile]
-    fallback ++= leftover
     groups.foreach { g =>
       // numRecords via the slim-planning 8-byte column — g.newFiles
       // come from planFiles (stats JSON nulled for driver memory), so

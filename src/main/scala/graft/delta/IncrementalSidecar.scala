@@ -48,8 +48,208 @@ import org.apache.spark.sql.functions._
   *    coverage) likewise fails that file back to the scan;
   *  - a commit JSON that cannot be read (expired log retention) or an
   *    add outside the walked window simply yields no group — scan.
+  *
+  * THE REFRESH SEQUENCE is written once too ([[refresh]]): each index
+  * contributes only its [[Kind]] (what differs between kinds, as data)
+  * and its kernel hooks — scan, remap, generation layout and, for the
+  * quantizer kinds, a [[Drift]] gauge.
   */
 object IncrementalSidecar {
+
+  /** What differs between sidecar kinds, as data. `name` is both the
+    * `_meta` kind and the `_graft_index/<name>_<cols>` directory
+    * prefix; `markers` are the `file_path` values of non-entry rows
+    * (trained quantizers riding the entry relation). Row-keyed kinds
+    * store entries describing exactly a file's logical rows, so they
+    * never cover a file with a live deletion vector and their entry
+    * counts are checkable against `numRecords` — exactly when
+    * `countsExact`, at most otherwise (a kernel that collapses
+    * duplicate ids per file, which a remap then mirrors). A non-row-
+    * keyed kind (Bloom: a per-file superset filter) covers every file.
+    * `refreshCols` is the auto-refresh entry point for a `_meta`
+    * column list, undefined for a list of the wrong shape. */
+  private[delta] final case class Kind(name: String,
+      markers: Seq[String] = Nil, rowKeyed: Boolean = true,
+      countsExact: Boolean = true)(
+      val refreshCols: PartialFunction[(DeltaLog, Seq[String], Boolean), Long]) {
+    def coverDvFiles: Boolean = !rowKeyed
+    def indexDir(log: DeltaLog, cols: Seq[String]): String =
+      new org.apache.hadoop.fs.Path(log.rootPath,
+        s"_graft_index/${name}_${cols.mkString("_")}").toString
+    def entries(log: DeltaLog, cols: Seq[String]): Option[DataFrame] =
+      Sidecar.read(log.spark, indexDir(log, cols))
+  }
+
+  /** The index's target columns exist and are data columns — every
+    * kind scans data files directly. `partitionWhy` says why a
+    * partition column is refused. */
+  private[delta] def validate(snap: Snapshot, cols: Seq[String],
+      partitionWhy: String = "the index scans data files directly"): Unit =
+    cols.foreach { c =>
+      require(snap.schema.fieldNames.contains(c),
+        s"column $c not in table schema " +
+          snap.schema.fieldNames.mkString("[", ", ", "]"))
+      require(!snap.metadata.partitionColumns.contains(c),
+        s"$c is a partition column — $partitionWhy")
+    }
+
+  /** `(file_path, cols...)` of `files` — raw parquet (physical column
+    * names under column mapping, rows masked by a deletion vector
+    * included), `input_file_name()` bound at the scan, before any
+    * shuffle (it returns "" after one). Catalyst prunes the read
+    * schema to `cols`: the build/refresh kernels read their columns,
+    * a remap reads the id column alone. */
+  private[delta] def physicalRead(log: DeltaLog, snap: Snapshot,
+      files: Seq[AddFile], cols: Seq[String]): DataFrame =
+    log.spark.read.schema(snap.physicalDataSchema)
+      .parquet(files.map(snap.absolutePath): _*)
+      .select(input_file_name().as("file_path") +:
+        cols.map(c => col(snap.physicalNameOf(c)).as(c)): _*)
+
+  /** Range-partitioned, `by`-sorted generation layout: a probe's pushed
+    * `by IN (...)` filter then skips row groups instead of scanning
+    * them. Every publish rewrites the generation whole anyway, so the
+    * range partition adds one shuffle of bytes already being written. */
+  private[delta] def sortedBy(by: String)(entries: DataFrame): DataFrame =
+    entries.repartitionByRange(
+      math.max(1, entries.sparkSession.sparkContext.defaultParallelism / 4),
+      col(by)).sortWithinPartitions(by)
+
+  /** A kind's remap of the planned groups over its data entries (marker
+    * rows excluded) and stored counts → (remapped entries, files that
+    * fell back to the kernel scan). */
+  private[delta] type Remap = (Snapshot, DataFrame, Seq[RemapGroup], Map[String, Long]) =>
+    (Option[DataFrame], Seq[AddFile])
+
+  /** The row-keyed remap: id attribution over a narrow physical read of
+    * the new files' id column ([[remapRowEntries]]). */
+  private[delta] def remapById(log: DeltaLog, kind: Kind,
+      idCol: String): Remap =
+    (snap, data, groups, counts) => remapRowEntries(log.spark, snap, data,
+      idCol, groups, fs => physicalRead(log, snap, fs, Seq(idCol)), counts,
+      dedupePerId = !kind.countsExact)
+
+  /** A quantizer's drift gauge. Every entry carries a per-row quality
+    * figure `column` (IVF: assignment cosine `asim`; IVF-PQ:
+    * reconstruction error `qerr`), so the index is its own baseline:
+    * `trips(oldMean, newMean)` is the kind's test of the newly scanned
+    * entries against the stored ones. On a trip the refresh rebuilds —
+    * `rebuild(entries, _meta params)`, retraining with the ORIGINAL
+    * build's params — unless `deferRebuild` (the write-path-hook
+    * posture: an O(uncovered files) refresh must not pay an O(corpus)
+    * retrain), which logs the drift loudly and keeps the incremental
+    * path; an explicit refresh picks the retrain up. */
+  private[delta] final case class Drift(column: String, threshold: Double,
+      trips: (Double, Double) => Boolean, deferRebuild: Boolean,
+      rebuild: (DataFrame, Map[String, String]) => Long)
+
+  /** Full (re)build: `entries(snap, files)` runs the kind's kernel —
+    * training first, for the quantizer kinds — over every coverable
+    * active file at the current snapshot, and the result publishes as
+    * one generation beside a `_meta` carrying the build's `params` (so
+    * a gauge-triggered retrain reuses THIS build's knobs). No coverable
+    * file → nothing is written. Returns the indexed snapshot version. */
+  private[delta] def build(log: DeltaLog, kind: Kind, cols: Seq[String],
+      validate: Snapshot => Unit, layout: DataFrame => DataFrame,
+      params: Map[String, String] = Map.empty)(
+      entries: (Snapshot, Seq[AddFile]) => DataFrame): Long = {
+    val snap = log.snapshot
+    validate(snap)
+    val files = coverableFiles(snap, kind.coverDvFiles)
+    if (files.isEmpty) return snap.version
+    val built = entries(snap, files)
+    val dir = kind.indexDir(log, cols)
+    Sidecar.writeMeta(log.spark, dir, kind.name, cols, params)
+    Sidecar.swapIn(log.spark, dir, layout(built))
+    snap.version
+  }
+
+  /** Incrementally extend a sidecar to the current snapshot — the one
+    * maintenance sequence every kind runs: scan ONLY the coverable
+    * files the sidecar does not cover yet, carry every still-coverable
+    * entry VERBATIM (its scan `version` untouched — the observable that
+    * proves covered files were not rescanned), remap files rewritten by
+    * `dataChange = false` commits instead of rescanning them, drop
+    * entries whose file left the coverable set, and publish the merged
+    * relation as one new generation. No sidecar yet → `build`. An idle
+    * refresh (nothing missing, nothing dead) publishes nothing — except
+    * that a row-keyed LEGACY generation (its `_coverage` predates entry
+    * counts, so the entry-count invariant is dormant) is republished
+    * once, entries byte-identical, so the swap's observed summary arms
+    * the invariant from the next read on.
+    *
+    * Driver footprint: the generation's file-count-sized coverage
+    * summary (no job over the entry relation) and path-shaped sets;
+    * entry rows are filtered by exact broadcast semi-joins on the STORED
+    * spellings. Returns the indexed snapshot version. */
+  private[delta] def refresh(log: DeltaLog, kind: Kind, cols: Seq[String],
+      validate: Snapshot => Unit, build: () => Long,
+      scan: (Snapshot, DataFrame, Seq[AddFile]) => DataFrame,
+      remap: Remap, layout: DataFrame => DataFrame,
+      drift: Option[Drift] = None): Long = {
+    drift.foreach(d => require(d.threshold >= 0.0,
+      s"driftThreshold must be >= 0, got ${d.threshold}"))
+    val spark = log.spark
+    val snap = log.snapshot
+    validate(snap)
+    val dir = kind.indexDir(log, cols)
+    val idx = Sidecar.read(spark, dir).getOrElse(return build())
+    val data =
+      if (kind.markers.isEmpty) idx
+      else idx.where(!col("file_path").isin(kind.markers: _*))
+    def publish(entries: DataFrame): Unit = {
+      Sidecar.repairMeta(spark, dir, kind.name, cols)
+      Sidecar.swapIn(spark, dir, layout(entries))
+    }
+    val (stored, since, summaryCounts) =
+      storedSummaryFull(spark, dir, idx, kind.markers.toSet)
+    // entry-count invariant (log-plane): a covered file whose entry
+    // count contradicts its add's numRecords is demoted — dropped from
+    // the kept set, rescanned, and NEVER a remap source
+    val counts = if (kind.rowKeyed) summaryCounts else Map.empty[String, Long]
+    val cov = coverage(snap, stored, kind.coverDvFiles, counts,
+      kind.countsExact)
+    if (!cov.changed) {
+      if (kind.rowKeyed && counts.isEmpty && stored.nonEmpty) publish(idx)
+      return snap.version
+    }
+    val (groups, toScan) = remapGroups(log, snap, cov.missing,
+      cov.coveredNorm, stored.filterNot(cov.invalidStored.toSet), since)
+    val (remapped, fellBack) = remap(snap, data, groups, counts)
+    val scanFiles = toScan ++ fellBack
+    val kept = keepStored(spark, idx, kind.markers ++ cov.liveStored)
+    val scanned =
+      if (scanFiles.isEmpty) idx.limit(0)
+      else drift match {
+        case None => scan(snap, idx, scanFiles)
+        case Some(d) =>
+          // materialize (ingest-sized) so the gauge and the publish
+          // share one kernel pass over the new files
+          val e = scan(snap, idx, scanFiles).localCheckpoint()
+          def mean(df: DataFrame): Option[Double] =
+            Option(df.agg(avg(d.column)).head().get(0))
+              .map(_.asInstanceOf[Double])
+          val newMean = mean(e)
+          (mean(data), newMean) match {
+            case (Some(o), Some(nw)) if d.trips(o, nw) =>
+              if (d.deferRebuild)
+                org.slf4j.LoggerFactory.getLogger(getClass).warn(
+                  s"${kind.name} index on ${log.tablePath} " +
+                    s"(${cols.mkString(",")}): ${d.column} drift (old mean " +
+                    f"$o%.4f, new $nw%.4f, threshold ${d.threshold}%.2f) — " +
+                    "retrain deferred to an explicit REFRESH; search " +
+                    "quality on new data may degrade")
+              else
+                return d.rebuild(idx, Sidecar.readMetaFull(spark, dir)
+                  .map(_._3).getOrElse(Map.empty))
+            case _ => ()
+          }
+          e
+      }
+    publish(kept.unionByName(remapped.getOrElse(idx.limit(0)))
+      .unionByName(scanned))
+    snap.version
+  }
 
   /** Stored-entry coverage against a snapshot's coverable set.
     * `invalidStored` are stored paths whose entry COUNT contradicts the
@@ -136,9 +336,8 @@ object IncrementalSidecar {
     * so a corrupted slice is rescanned rather than served. Pass empty
     * for per-file sidecars (Bloom: one filter row per file). */
   def coverage(snap: Snapshot, storedPaths: Seq[String],
-      coverDvFiles: Boolean,
-      storedCounts: Map[String, Long] = Map.empty,
-      countsExact: Boolean = true): Coverage = {
+      coverDvFiles: Boolean, storedCounts: Map[String, Long],
+      countsExact: Boolean): Coverage = {
     // ONE candidate/normalize pass per coverable file and ONE
     // normalize per stored spelling, shared by every derived view —
     // at 10⁶ files these driver passes ARE the cost of a refresh/
@@ -180,69 +379,41 @@ object IncrementalSidecar {
       Seq("file_path"), "left_semi")
   }
 
-  /** The probe-side split: stored entries still usable at this
-    * snapshot, and the active files the index cannot serve (not
-    * indexed, carrying a live deletion vector when the kind never
-    * covers DV'd files, or failing the entry-count invariant) — those
-    * are computed LIVE by the probe. */
-  def probeCoverage(snap: Snapshot, storedPaths: Seq[String],
-      coverDvFiles: Boolean,
-      storedCounts: Map[String, Long] = Map.empty,
-      countsExact: Boolean = true)
-      : (Seq[String], Seq[AddFile]) = {
-    val cov = coverage(snap, storedPaths, coverDvFiles, storedCounts,
-      countsExact)
+  /** The probe-side split of a kind's sidecar `idx`, planned from its
+    * stored summary: stored entries still usable at this snapshot, the
+    * active files the index cannot serve (not indexed, carrying a live
+    * deletion vector when the kind never covers DV'd files, or failing
+    * the entry-count invariant) — those are computed LIVE by the probe
+    * — and the stored entry counts. */
+  private[delta] def probeCoverage(log: DeltaLog, snap: Snapshot, kind: Kind,
+      cols: Seq[String], idx: DataFrame)
+      : (Seq[String], Seq[AddFile], Map[String, Long]) = {
+    val (stored, _, counts) = storedSummaryFull(log.spark,
+      kind.indexDir(log, cols), idx, kind.markers.toSet)
+    val cov = coverage(snap, stored, kind.coverDvFiles, counts,
+      kind.countsExact)
     // a coverable file is servable iff some candidate norm is a VALID
     // stored norm — which is exactly cov.missing's complement (its
     // coveredNorm excludes invalid-demoted paths), so the live set is
     // missing + the DV'd files the kind never covers; no second
     // normalize pass over the file set
     val dvd =
-      if (coverDvFiles) Nil
+      if (kind.coverDvFiles) Nil
       else snap.planFiles().filter(_.deletionVector.exists(_.cardinality > 0))
-    (cov.liveStored, cov.missing ++ dvd)
+    (cov.liveStored, cov.missing ++ dvd, counts)
   }
 
-  /** NARROW `(file_path, idCol)` read of `files` — raw parquet
-    * (physical column name under column mapping), `input_file_name()`
-    * bound at the scan. Catalyst prunes the read schema to the id
-    * column alone: this is the only data-plane read a remap performs. */
-  def narrowIdRead(log: DeltaLog, snap: Snapshot, files: Seq[AddFile],
-      idCol: String): DataFrame = {
-    val physId = snap.physicalNameOf(idCol)
-    val partPhys = snap.metadata.partitionColumns.map(snap.physicalNameOf).toSet
-    val dataSchema = org.apache.spark.sql.types.StructType(
-      snap.physicalSchema.filterNot(f => partPhys.contains(f.name)))
-    log.spark.read.schema(dataSchema)
-      .parquet(files.map(snap.absolutePath): _*)
-      .select(input_file_name().as("file_path"), col(physId).as(idCol))
-  }
-
-  /** The sidecar's last scan version — the commit-walk lower bound for
-    * [[remapGroups]] (every coverable file present at that version is
-    * covered by the maintenance contract). */
-  def maxStoredVersion(entries: DataFrame): Long =
-    Option(entries.agg(max(col("version"))).head().get(0))
-      .map(_.asInstanceOf[Long]).getOrElse(-1L)
-
-  /** The planning pair every refresh/search starts from: the distinct
-    * stored file_path spellings (markers excluded) and the sidecar's
-    * max entry version. Served from the generation's persisted
-    * `_coverage` summary when present ([[Sidecar.readCoverage]] — one
-    * file-count-sized read, memoized per immutable generation, NO job
-    * over the entry relation); legacy generations fall back to the
-    * distinct-over-entries derivation. */
-  def storedSummary(spark: SparkSession, dir: String, entries: DataFrame,
-      markers: Set[String]): (Seq[String], Long) = {
-    val (paths, since, _) = storedSummaryFull(spark, dir, entries, markers)
-    (paths, since)
-  }
-
-  /** [[storedSummary]] plus per-path entry counts (empty map when the
-    * generation's summary predates the count field AND the entry
-    * relation had to be aggregated — the fallback derives counts too,
-    * so only a legacy `_coverage` file yields unknowns). Counts with
-    * value -1 (legacy lines) are dropped from the returned map. */
+  /** The planning triple every refresh/search starts from: the distinct
+    * stored file_path spellings (markers excluded), the sidecar's max
+    * entry version (the commit-walk lower bound for [[remapGroups]]),
+    * and per-path entry counts. Served from the
+    * generation's persisted `_coverage` summary when present
+    * ([[Sidecar.readCoverageFull]] — one file-count-sized read,
+    * memoized per immutable generation, NO job over the entry
+    * relation); legacy generations fall back to the
+    * distinct-over-entries derivation, which derives counts too. The
+    * count map is empty only for a legacy `_coverage` file (its lines
+    * carry no count; their -1 values are dropped from the map). */
   def storedSummaryFull(spark: SparkSession, dir: String,
       entries: DataFrame, markers: Set[String])
       : (Seq[String], Long, Map[String, Long]) =
@@ -398,10 +569,8 @@ object IncrementalSidecar {
     * text or vectors. */
   def remapRowEntries(spark: SparkSession, snap: Snapshot,
       entries: DataFrame, idCol: String, groups: Seq[RemapGroup],
-      idRead: Seq[AddFile] => DataFrame,
-      storedCounts: Map[String, Long] = Map.empty,
-      dedupePerId: Boolean = false)
-      : (Option[DataFrame], Seq[AddFile]) = {
+      idRead: Seq[AddFile] => DataFrame, storedCounts: Map[String, Long],
+      dedupePerId: Boolean): (Option[DataFrame], Seq[AddFile]) = {
     if (groups.isEmpty) return (None, Nil)
     import spark.implicits._
     val contentCols = entries.columns

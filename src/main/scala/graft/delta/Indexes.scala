@@ -9,6 +9,21 @@ import org.apache.hadoop.fs.Path
   * be parsed back into column lists. */
 object Indexes {
 
+  /** The sidecar kinds by `_meta` name — each kind's coverage policy
+    * and auto-refresh entry point ([[IncrementalSidecar.Kind]]). */
+  private val kinds: Map[String, IncrementalSidecar.Kind] =
+    Seq(BloomIndex.kind, LshIndex.kind, IvfIndex.kind, PqIndex.kind)
+      .map(k => k.name -> k).toMap
+
+  /** Every sidecar directory under the table's `_graft_index/`, by name. */
+  private def indexDirs(log: DeltaLog): Seq[Path] = {
+    val base = new Path(log.rootPath, "_graft_index")
+    val fs = base.getFileSystem(log.spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(base)) Nil
+    else fs.listStatus(base).filter(_.isDirectory).map(_.getPath)
+      .sortBy(_.getName).toSeq
+  }
+
   /** One row per sidecar index under `_graft_index/`:
     * `(kind, columns, covered_files, active_files, stale_files,
     * invalid_files)`. Coverage compares the sidecar's distinct file
@@ -36,43 +51,37 @@ object Indexes {
     // (LogScaleProbe); snapshot-memoized, so refreshes in the same
     // maintenance sweep share the pass too
     val (activeByNorm, dvFreeByNorm) = snap.candNormIndexes()
-    val activeNorm: Set[String] = activeByNorm.keySet
-    val base = new Path(log.rootPath, "_graft_index")
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(base)) return Seq.empty
-    fs.listStatus(base).filter(_.isDirectory).map(_.getPath)
-      .sortBy(_.getName).toSeq.flatMap { dir =>
-        Sidecar.read(spark, dir.toString).map { df =>
-          val (kind, cols) = Sidecar.readMeta(spark, dir.toString)
-            .map { case (k, cs) => (k, cs.mkString(", ")) }
-            .getOrElse(("unknown", dir.getName))
-          val coverableSize =
-            if (kind == "bloom") active.size else dvFree.size
-          val coverableNorm =
-            if (kind == "bloom") activeNorm else dvFreeByNorm.keySet
-          // planned from the generation's coverage summary when
-          // present (no entry-relation job); markers are "__"-prefixed
-          val (storedRaw, _, counts) = IncrementalSidecar.storedSummaryFull(
-            spark, dir.toString, df, Set.empty)
-          val stored = storedRaw.filterNot(_.startsWith("__"))
-          val storedNorm = stored.map(p => p -> Mutations.normalize(p))
-          val rowKeyed = kind != "bloom" && kind != "unknown"
-          // entry-count invariant — THE shared predicate
-          // (IncrementalSidecar.invalidStoredPaths), so SHOW INDEXES
-          // and refresh can never disagree; exactness per kind (IVF
-          // collapses duplicate ids, LSH/PQ store one entry per row)
-          val byNorm = if (kind == "bloom") activeByNorm else dvFreeByNorm
-          val invalid =
-            if (!rowKeyed) Nil
-            else IncrementalSidecar.invalidStoredPathsNorm(byNorm,
-              storedNorm, counts, exact = kind != "ivf")
-          val invalidSet = invalid.toSet
-          val covered = storedNorm.count { case (p, n) =>
-            !invalidSet.contains(p) && coverableNorm.contains(n) }
-          (kind, cols, covered.toLong, coverableSize.toLong,
-            (coverableSize - covered).toLong, invalid.size.toLong)
-        }
+    indexDirs(log).flatMap { dir =>
+      Sidecar.read(spark, dir.toString).map { df =>
+        val meta = Sidecar.readMeta(spark, dir.toString)
+        val kind = meta.flatMap(m => kinds.get(m._1))
+        // a kind that covers DV'd files counts against the whole
+        // active set; unknown and pre-descriptor sidecars count
+        // against the DV-free set and skip the entry-count invariant
+        val coverDv = kind.exists(_.coverDvFiles)
+        val coverableSize = if (coverDv) active.size else dvFree.size
+        val byNorm = if (coverDv) activeByNorm else dvFreeByNorm
+        // planned from the generation's coverage summary when
+        // present (no entry-relation job)
+        val (stored, _, counts) = IncrementalSidecar.storedSummaryFull(
+          spark, dir.toString, df, kind.map(_.markers.toSet)
+            .getOrElse(Set.empty))
+        val storedNorm = stored.map(p => p -> Mutations.normalize(p))
+        // entry-count invariant — THE shared predicate
+        // (IncrementalSidecar.invalidStoredPaths), so SHOW INDEXES
+        // and refresh can never disagree
+        val invalid = kind.filter(_.rowKeyed).map(k =>
+          IncrementalSidecar.invalidStoredPathsNorm(byNorm, storedNorm,
+            counts, k.countsExact)).getOrElse(Nil)
+        val invalidSet = invalid.toSet
+        val covered = storedNorm.count { case (p, n) =>
+          !invalidSet.contains(p) && byNorm.contains(n) }
+        val (name, cols) = meta.map { case (k, cs) => (k, cs.mkString(", ")) }
+          .getOrElse(("unknown", dir.getName))
+        (name, cols, covered.toLong, coverableSize.toLong,
+          (coverableSize - covered).toLong, invalid.size.toLong)
       }
+    }
   }
 
   /** Incrementally refresh every descriptor-bearing sidecar index on
@@ -89,26 +98,11 @@ object Indexes {
     * O(corpus) quantizer retrain — the hook's contract is O(uncovered
     * files) per commit. Deferred drift is logged loudly by the index
     * and picked up by the next EXPLICIT refresh. */
-  def refreshAll(log: DeltaLog, deferDriftRebuild: Boolean = false): Int = {
-    val spark = log.spark
-    val base = new Path(log.rootPath, "_graft_index")
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(base)) return 0
-    fs.listStatus(base).filter(_.isDirectory).map(_.getPath)
-      .sortBy(_.getName).toSeq.count { dir =>
-        Sidecar.readMeta(spark, dir.toString) match {
-          case Some(("bloom", Seq(c))) =>
-            BloomIndex.buildIncremental(log, c); true
-          case Some(("lsh", Seq(id, text))) =>
-            LshIndex.refresh(log, id, text); true
-          case Some(("ivf", Seq(id, vec))) =>
-            IvfIndex.refresh(log, id, vec,
-              deferRebuild = deferDriftRebuild); true
-          case Some(("ivfpq", Seq(id, vec))) =>
-            PqIndex.refresh(log, id, vec,
-              deferRebuild = deferDriftRebuild); true
-          case _ => false
-        }
+  def refreshAll(log: DeltaLog, deferDriftRebuild: Boolean = false): Int =
+    indexDirs(log).count { dir =>
+      Sidecar.readMeta(log.spark, dir.toString).exists { case (name, cols) =>
+        kinds.get(name).exists(
+          _.refreshCols.lift((log, cols, deferDriftRebuild)).isDefined)
       }
-  }
+    }
 }

@@ -52,13 +52,19 @@ object IvfIndex {
 
   private val CentroidsMarker = "__centroids"
 
+  /** Assignment groups by (file, id), collapsing duplicate ids per
+    * file: entry counts may legitimately sit below `numRecords`. */
+  private[delta] val kind = IncrementalSidecar.Kind("ivf",
+    markers = Seq(CentroidsMarker), countsExact = false)(
+    { case (log, Seq(id, vec), defer) =>
+      refresh(log, id, vec, deferRebuild = defer) })
+
   def indexDir(log: DeltaLog, idCol: String, vecCol: String): String =
-    new org.apache.hadoop.fs.Path(
-      log.rootPath, s"_graft_index/ivf_${idCol}_$vecCol").toString
+    kind.indexDir(log, Seq(idCol, vecCol))
 
   /** The live sidecar relation, None when no index is built. */
   def entries(log: DeltaLog, idCol: String, vecCol: String): Option[DataFrame] =
-    Sidecar.read(log.spark, indexDir(log, idCol, vecCol))
+    kind.entries(log, Seq(idCol, vecCol))
 
   /** The persisted quantizer as a (idCol, vecCol) frame — the same
     * shape [[Similarity.ivfTopK]] takes, so callers can cross-check
@@ -67,35 +73,6 @@ object IvfIndex {
     entries(log, idCol, vecCol).map(
       _.where(col("file_path") === CentroidsMarker)
         .select(col("cell").cast("long").as(idCol), col("vec").as(vecCol)))
-
-  private def validate(snap: Snapshot, idCol: String, vecCol: String): Unit =
-    Seq(idCol, vecCol).foreach { c =>
-      require(snap.schema.fieldNames.contains(c),
-        s"column $c not in table schema " +
-          snap.schema.fieldNames.mkString("[", ", ", "]"))
-      require(!snap.metadata.partitionColumns.contains(c),
-        s"$c is a partition column — the index scans data files directly")
-    }
-
-  private def coverableFiles(snap: Snapshot): Seq[AddFile] =
-    IncrementalSidecar.coverableFiles(snap, coverDvFiles = false)
-
-  /** Raw (file_path, id, v, nrm) rows of `files` — physical parquet
-    * read (file_path bound BEFORE any shuffle), vectors as doubles. */
-  private def rawRows(log: DeltaLog, snap: Snapshot,
-      files: Seq[AddFile], idCol: String, vecCol: String): DataFrame = {
-    val physId = snap.physicalNameOf(idCol)
-    val physVec = snap.physicalNameOf(vecCol)
-    val partPhys = snap.metadata.partitionColumns.map(snap.physicalNameOf).toSet
-    val dataSchema = org.apache.spark.sql.types.StructType(
-      snap.physicalSchema.filterNot(f => partPhys.contains(f.name)))
-    log.spark.read.schema(dataSchema)
-      .parquet(files.map(snap.absolutePath): _*)
-      .select(input_file_name().as("file_path"),
-        col(physId).as(idCol),
-        col(physVec).cast("array<double>").as("v"))
-      .withColumn("nrm", VectorExpressions.l2Norm(col("v")))
-  }
 
   /** Assign rows to their max-cosine cell — the EXACT expressions of
     * [[Similarity.ivfTopK]]'s assignment (round-4 cosine, max_by with
@@ -125,7 +102,11 @@ object IvfIndex {
   /** Assignment entries for `files` under `cs`, cell-sorted. */
   private def scanEntries(log: DeltaLog, snap: Snapshot, files: Seq[AddFile],
       idCol: String, vecCol: String, cs: Seq[(Long, Seq[Double])]): DataFrame =
-    assignCells(rawRows(log, snap, files, idCol, vecCol),
+    assignCells(
+      IncrementalSidecar.physicalRead(log, snap, files, Seq(idCol, vecCol))
+        .select(col("file_path"), col(idCol),
+          col(vecCol).cast("array<double>").as("v"))
+        .withColumn("nrm", VectorExpressions.l2Norm(col("v"))),
       centFrame(log.spark, cs))
       .select(col("file_path"), col(idCol), col("cell").cast("int").as("cell"),
         col("asim"), col("vec"), col("nrm"), lit(snap.version).as("version"))
@@ -134,12 +115,8 @@ object IvfIndex {
     * so a probe's pushed `cell IN (...)` filter prunes row groups. The
     * centroid rows ride along (they sort into the low cells — k rows,
     * noise-free). */
-  private def publish(log: DeltaLog, dir: String, entries: DataFrame): Unit =
-    Sidecar.swapIn(log.spark, dir,
-      entries.repartitionByRange(
-        math.max(1, log.spark.sparkContext.defaultParallelism / 4),
-        col("cell"))
-        .sortWithinPartitions("cell"))
+  private val layout: DataFrame => DataFrame =
+    IncrementalSidecar.sortedBy("cell")
 
   private def centroidRows(log: DeltaLog, snap: Snapshot, idCol: String,
       cs: Seq[(Long, Seq[Double])], trainedVersion: Long): DataFrame = {
@@ -158,143 +135,63 @@ object IvfIndex {
     * [[Similarity.trainKMeans]]) on the current corpus and assign
     * every coverable file. Returns the indexed version. */
   def build(log: DeltaLog, idCol: String, vecCol: String,
-      k: Int = 16, iterations: Int = 3): Long = {
-    val snap = log.snapshot
-    validate(snap, idCol, vecCol)
-    val files = coverableFiles(snap)
-    if (files.isEmpty) return snap.version
-    val cs = Similarity.trainKMeans(snap.read(), idCol, vecCol, k, iterations)
-      .map { case (cid, arr) => (cid, arr.toSeq) }
-    // build params persisted so a gauge-triggered retrain reuses THIS
-    // build's knobs (not the signature defaults)
-    Sidecar.writeMeta(log.spark, indexDir(log, idCol, vecCol),
-      "ivf", Seq(idCol, vecCol),
-      Map("k" -> k.toString, "iterations" -> iterations.toString))
-    publish(log, indexDir(log, idCol, vecCol),
-      centroidRows(log, snap, idCol, cs, snap.version)
-        .unionByName(scanEntries(log, snap, files, idCol, vecCol, cs)))
-    snap.version
-  }
+      k: Int = 16, iterations: Int = 3): Long =
+    IncrementalSidecar.build(log, kind, Seq(idCol, vecCol),
+      IncrementalSidecar.validate(_, Seq(idCol, vecCol)), layout,
+      Map("k" -> k.toString, "iterations" -> iterations.toString)) {
+      (snap, files) =>
+        val cs = Similarity.trainKMeans(snap.read(), idCol, vecCol, k,
+          iterations).map { case (cid, arr) => (cid, arr.toSeq) }
+        centroidRows(log, snap, idCol, cs, snap.version)
+          .unionByName(scanEntries(log, snap, files, idCol, vecCol, cs))
+    }
 
   private def storedCentroids(idx: DataFrame): Seq[(Long, Seq[Double])] =
     idx.where(col("file_path") === CentroidsMarker)
       .select(col("cell"), col("vec")).collect()
       .map(r => (r.getInt(0).toLong, r.getSeq[Double](1))).toSeq
 
-  /** Incrementally extend the index: assign ONLY uncovered coverable
-    * files against the PERSISTED centroids, keep surviving entries
-    * verbatim, drop entries of departed files. Idle refresh publishes
-    * nothing. Returns the indexed version.
+  /** Incrementally extend the index ([[IncrementalSidecar.refresh]]):
+    * assign ONLY uncovered coverable files against the PERSISTED
+    * centroids, keep surviving entries verbatim, drop entries of
+    * departed files; compaction rewrites carry (cell, asim, vec, nrm)
+    * verbatim via a narrow id read, so the drift gauge sees only
+    * genuinely-new rows. Idle refresh publishes nothing. Returns the
+    * indexed version.
     *
     * QUANTIZER DRIFT GAUGE (the IVF analogue of the clustering
-    * bounds-drift gauge): every entry carries its assignment
-    * similarity (`asim` — the chosen cell's round-4 cosine), so the
-    * index itself is the quality baseline. When the NEW files' mean
-    * asim falls more than `driftThreshold` below the existing
-    * entries' mean, the incoming distribution no longer fits the
-    * frozen quantizer — new points would pile into ill-fitting cells
-    * and probe recall would silently rot — and the refresh routes to a
-    * full [[build]], which retrains with the ORIGINAL build's
-    * (k, iterations) from the sidecar `_meta`. The default is 0.2
-    * cosine; ≥ 2 can never trigger (cosine spans 4 ⇒ forced incremental).
-    *
-    * `deferRebuild` (the write-path-hook posture): a gauge trip does
-    * NOT synchronously pay the O(corpus) retrain — it logs loudly and
-    * takes the incremental path, keeping the hook's O(uncovered files)
-    * contract; recall quality is flagged, never silently rotted, and
-    * an explicit user REFRESH/REBUILD picks the retrain up. */
+    * bounds-drift gauge, [[IncrementalSidecar.Drift]]): every entry
+    * carries its assignment similarity (`asim` — the chosen cell's
+    * round-4 cosine), so the index itself is the quality baseline.
+    * When the NEW files' mean asim falls more than `driftThreshold`
+    * below the existing entries' mean, the incoming distribution no
+    * longer fits the frozen quantizer — new points would pile into
+    * ill-fitting cells and probe recall would silently rot — and the
+    * refresh routes to a full [[build]], which retrains with the
+    * ORIGINAL build's (k, iterations) from the sidecar `_meta`. The
+    * default is 0.2 cosine; ≥ 2 can never trigger (cosine spans 4 ⇒
+    * forced incremental); a negative threshold is refused.
+    * `deferRebuild` (the write-path-hook posture) logs the trip and
+    * keeps the incremental path. */
   def refresh(log: DeltaLog, idCol: String, vecCol: String,
       driftThreshold: Double = 0.2,
-      deferRebuild: Boolean = false): Long = {
-    val spark = log.spark
-    val snap = log.snapshot
-    validate(snap, idCol, vecCol)
-    val idx = entries(log, idCol, vecCol).getOrElse(
-      return build(log, idCol, vecCol))
-    val dataRows = idx.where(col("file_path") =!= CentroidsMarker)
-    val (storedRaw, since, counts) = IncrementalSidecar.storedSummaryFull(
-      spark, indexDir(log, idCol, vecCol), idx, Set(CentroidsMarker))
-    // countsExact = false: assignment collapses duplicate ids per
-    // file, so counts may legitimately sit below numRecords — only an
-    // EXCESS (the ghost signature) flags
-    val cov = IncrementalSidecar.coverage(snap, storedRaw,
-      coverDvFiles = false, counts, countsExact = false)
-    if (!cov.changed) {
-      // legacy generation (pre-count `_coverage`): republish verbatim
-      // once so the observed 3-field summary arms the entry-count
-      // invariant (see LshIndex.refresh for the full rationale)
-      if (counts.isEmpty && storedRaw.nonEmpty) {
-        Sidecar.repairMeta(spark, indexDir(log, idCol, vecCol),
-          "ivf", Seq(idCol, vecCol))
-        publish(log, indexDir(log, idCol, vecCol), idx)
-      }
-      return snap.version
-    }
-    val validStored = storedRaw.filterNot(cov.invalidStored.toSet)
-    // compaction remap: dataChange=false rewrites carry (cell, asim,
-    // vec, nrm) verbatim via a narrow id read — no re-assignment, and
-    // the drift gauge sees only genuinely-new rows
-    val (groups, toScan) = IncrementalSidecar.remapGroups(log, snap,
-      cov.missing, cov.coveredNorm, validStored, since)
-    val (remapped, fellBack) = IncrementalSidecar.remapRowEntries(
-      spark, snap, dataRows, idCol, groups,
-      fs => IncrementalSidecar.narrowIdRead(log, snap, fs, idCol), counts,
-      dedupePerId = true) // assignment collapses duplicate ids per file
-    val missing = toScan ++ fellBack
-    import spark.implicits._
-    val kept = idx.join(
-      broadcast((CentroidsMarker +: cov.liveStored).toDF("file_path")),
-      Seq("file_path"), "left_semi")
-    val newEntries =
-      if (missing.isEmpty) idx.limit(0)
-      else {
-        // materialize (ingest-sized) so the drift agg and the publish
-        // share one assignment pass over the new files
-        val e = scanEntries(log, snap, missing, idCol, vecCol,
-          storedCentroids(idx)).localCheckpoint()
-        require(driftThreshold >= 0.0,
-          s"driftThreshold must be >= 0, got $driftThreshold")
-        val newAvg = Option(e.agg(avg("asim")).head().get(0))
-          .map(_.asInstanceOf[Double])
-        val oldAvg = Option(
-          idx.where(col("file_path") =!= CentroidsMarker)
-            .agg(avg("asim")).head().get(0))
-          .map(_.asInstanceOf[Double])
-        (oldAvg, newAvg) match {
-          case (Some(o), Some(nw)) if o - nw > driftThreshold =>
-            if (deferRebuild) {
-              // write-path hook: keep the O(uncovered) contract — flag
-              // the drift loudly and fall through to the incremental
-              // assignment under the frozen quantizer
-              org.slf4j.LoggerFactory.getLogger(getClass).warn(
-                s"IVF index on ${log.tablePath} ($idCol,$vecCol): " +
-                  f"assignment-quality drift (old mean $o%.4f, new " +
-                  f"$nw%.4f > $driftThreshold%.2f) — retrain deferred to an " +
-                  "explicit REFRESH; probe recall on new data may degrade")
-            } else {
-              // the frozen quantizer no longer fits the incoming data —
-              // retrain on the whole corpus with the ORIGINAL build's
-              // params from _meta (centroid count is the fallback)
-              val params = Sidecar
-                .readMetaFull(spark, indexDir(log, idCol, vecCol))
-                .map(_._3).getOrElse(Map.empty)
-              return build(log, idCol, vecCol,
-                k = params.get("k").flatMap(_.toIntOption)
-                  .getOrElse(storedCentroids(idx).size),
-                iterations = params.get("iterations")
-                  .flatMap(_.toIntOption).getOrElse(3))
-            }
-          case _ => ()
-        }
-        e
-      }
-    Sidecar.repairMeta(spark, indexDir(log, idCol, vecCol),
-      "ivf", Seq(idCol, vecCol))
-    publish(log, indexDir(log, idCol, vecCol),
-      kept.unionByName(remapped.getOrElse(idx.limit(0)))
-        .unionByName(newEntries))
-    snap.version
-  }
+      deferRebuild: Boolean = false): Long =
+    IncrementalSidecar.refresh(log, kind, Seq(idCol, vecCol),
+      validate = IncrementalSidecar.validate(_, Seq(idCol, vecCol)),
+      build = () => build(log, idCol, vecCol),
+      scan = (snap, idx, files) =>
+        scanEntries(log, snap, files, idCol, vecCol, storedCentroids(idx)),
+      remap = IncrementalSidecar.remapById(log, kind, idCol),
+      layout = layout,
+      drift = Some(IncrementalSidecar.Drift("asim", driftThreshold,
+        (oldMean, newMean) => oldMean - newMean > driftThreshold,
+        deferRebuild,
+        // centroid count is the fallback for a param-less `_meta`
+        (idx, params) => build(log, idCol, vecCol,
+          k = params.get("k").flatMap(_.toIntOption)
+            .getOrElse(storedCentroids(idx).size),
+          iterations = params.get("iterations")
+            .flatMap(_.toIntOption).getOrElse(3)))))
 
   /** ANN top-k THROUGH the index: per query (a frame carrying idCol +
     * vecCol), rank its nprobe max-cosine cells, read ONLY those cells'
@@ -309,7 +206,7 @@ object IvfIndex {
       vecCol: String, k: Int, nprobe: Int = 2): DataFrame = {
     val spark = log.spark
     val snap = log.snapshot
-    validate(snap, idCol, vecCol)
+    IncrementalSidecar.validate(snap, Seq(idCol, vecCol))
     val idx = entries(log, idCol, vecCol).getOrElse(
       throw new IllegalStateException(
         s"no IVF index on ${log.tablePath} for ($idCol, $vecCol): run " +
@@ -338,10 +235,8 @@ object IvfIndex {
       .collect().map(_.getInt(0)).toSeq
     // covered entries of still-active DV-free files only — planned
     // from the generation's coverage summary, not an entry-relation job
-    val (storedRaw, _, counts) = IncrementalSidecar.storedSummaryFull(
-      spark, indexDir(log, idCol, vecCol), idx, Set(CentroidsMarker))
-    val (usable, liveFiles) = IncrementalSidecar.probeCoverage(
-      snap, storedRaw, coverDvFiles = false, counts, countsExact = false)
+    val (usable, liveFiles, _) = IncrementalSidecar.probeCoverage(
+      log, snap, kind, Seq(idCol, vecCol), idx)
     import spark.implicits._
     val indexed = idx
       .where(col("cell").isin(probedCells: _*)) // pushed: cell-sorted files

@@ -60,56 +60,37 @@ object LshIndex {
     * list; past it the probe keeps the single-pass shape. */
   private val ProbeIdPushdownMax = 10000
 
+  private[delta] val kind = IncrementalSidecar.Kind("lsh")(
+    { case (log, Seq(id, text), _) => refresh(log, id, text) })
+
   /** Shingle width is pinned to [[MinHashLsh]]'s default (word
     * 3-grams): the index stores derived signatures, so every consumer
     * must hash identically. */
   def indexDir(log: DeltaLog, idCol: String, textCol: String): String =
-    new org.apache.hadoop.fs.Path(
-      log.rootPath, s"_graft_index/lsh_${idCol}_$textCol").toString
+    kind.indexDir(log, Seq(idCol, textCol))
 
   /** The live sidecar relation (file_path, id, hs, ks, version), None
     * when no index is built. */
   def entries(log: DeltaLog, idCol: String, textCol: String): Option[DataFrame] =
-    Sidecar.read(log.spark, indexDir(log, idCol, textCol))
+    kind.entries(log, Seq(idCol, textCol))
 
   private[delta] def validate(snap: Snapshot, idCol: String, textCol: String): Unit = {
-    Seq(idCol, textCol).foreach { c =>
-      require(snap.schema.fieldNames.contains(c),
-        s"column $c not in table schema " +
-          snap.schema.fieldNames.mkString("[", ", ", "]"))
-      require(!snap.metadata.partitionColumns.contains(c),
-        s"$c is a partition column — the index scans data files " +
-          "directly and needs both columns in the file bytes")
-    }
+    IncrementalSidecar.validate(snap, Seq(idCol, textCol))
     require(snap.schema(textCol).dataType ==
       org.apache.spark.sql.types.StringType,
       s"text column $textCol must be STRING, is " +
         snap.schema(textCol).dataType.simpleString)
   }
 
-  /** Active files an entry may describe: no live deletion vector. */
-  private def coverableFiles(snap: Snapshot): Seq[AddFile] =
-    IncrementalSidecar.coverableFiles(snap, coverDvFiles = false)
-
   /** ONE streaming signature pass over `files` → (file_path, id, hs,
     * ks, version) — the build primitive full and incremental refresh
-    * share. Reads the raw parquet (physical column names under column
-    * mapping); callers pass DV-free files only. `input_file_name()` is
-    * bound BEFORE the widening repartition (it returns "" after any
-    * shuffle), and the expensive kernel sits above the repartition so
-    * narrow inputs still parallelize (the round-8 lesson). */
+    * share; callers pass DV-free files only. The expensive kernel sits
+    * above the widening repartition so narrow inputs still parallelize
+    * (the round-8 lesson). */
   private def scanEntries(log: DeltaLog, snap: Snapshot,
       files: Seq[AddFile], idCol: String, textCol: String): DataFrame = {
-    val spark = log.spark
-    val physId = snap.physicalNameOf(idCol)
-    val physText = snap.physicalNameOf(textCol)
-    val partPhys = snap.metadata.partitionColumns.map(snap.physicalNameOf).toSet
-    val dataSchema = org.apache.spark.sql.types.StructType(
-      snap.physicalSchema.filterNot(f => partPhys.contains(f.name)))
-    val raw = spark.read.schema(dataSchema)
-      .parquet(files.map(snap.absolutePath): _*)
-      .select(input_file_name().as("file_path"),
-        col(physId).as(idCol), col(physText).as(textCol))
+    val raw = IncrementalSidecar.physicalRead(log, snap, files,
+      Seq(idCol, textCol))
     // size-derived widen target (see graft.operators.Adaptive): full
     // width at scale, fewer fuller kernel tasks at bench scale
     val wide = graft.operators.Adaptive.widen(raw)
@@ -126,96 +107,34 @@ object LshIndex {
       lit(snap.version).as("version"))
   }
 
-  /** ID-sorted generation layout: the probe's second phase reads `hs`
-    * through a pushed `id IN (candidates)` filter, and id-range-sorted
-    * row groups are what make that filter SKIP row groups instead of
-    * scanning them (the [[IvfIndex]] cell-sorted discipline, applied
-    * to the id axis). The generation is rewritten whole by every
-    * publish anyway, so the range partition adds one shuffle of bytes
-    * already being written. */
-  private def publish(log: DeltaLog, dir: String, idCol: String,
-      entries: DataFrame): Unit =
-    Sidecar.swapIn(log.spark, dir,
-      entries.repartitionByRange(
-        math.max(1, log.spark.sparkContext.defaultParallelism / 4),
-        col(idCol))
-        .sortWithinPartitions(idCol))
-
   /** Build (or rebuild) the index over every coverable active file at
-    * the current snapshot. Returns the indexed version. */
-  def build(log: DeltaLog, idCol: String, textCol: String): Long = {
-    val snap = log.snapshot
-    validate(snap, idCol, textCol)
-    val files = coverableFiles(snap)
-    if (files.isEmpty) return snap.version
-    Sidecar.writeMeta(log.spark, indexDir(log, idCol, textCol),
-      "lsh", Seq(idCol, textCol))
-    publish(log, indexDir(log, idCol, textCol), idCol,
-      scanEntries(log, snap, files, idCol, textCol))
-    snap.version
-  }
+    * the current snapshot. Returns the indexed version. Generations are
+    * id-sorted: the probe's second phase reads `hs` through a pushed
+    * `id IN (candidates)` filter, which then skips row groups. */
+  def build(log: DeltaLog, idCol: String, textCol: String): Long =
+    IncrementalSidecar.build(log, kind, Seq(idCol, textCol),
+      validate(_, idCol, textCol), IncrementalSidecar.sortedBy(idCol))(
+      scanEntries(log, _, _, idCol, textCol))
 
-  /** Incrementally extend the index to the current snapshot: scan ONLY
-    * the coverable files the sidecar does not cover yet, keep every
-    * still-coverable entry VERBATIM, drop entries whose file left the
-    * coverable set. No sidecar yet → full [[build]]. Idle refresh
-    * (nothing missing, nothing dead) writes nothing. Returns the
-    * indexed version.
+  /** Incrementally extend the index to the current snapshot
+    * ([[IncrementalSidecar.refresh]]): shingle ONLY the coverable
+    * files the sidecar does not cover yet, keep every still-coverable
+    * entry VERBATIM, drop entries whose file left the coverable set.
+    * No sidecar yet → full [[build]]. Idle refresh writes nothing.
+    * Returns the indexed version.
     *
     * Files rewritten by `dataChange = false` commits (OPTIMIZE,
     * clustering) are REMAPPED, not re-shingled: a narrow id-only read
     * of the new files joins the old entries by id and carries hs/ks
     * byte-verbatim ([[IncrementalSidecar.remapRowEntries]]) — refresh
     * cost stays O(genuinely-new bytes) under routine compaction. */
-  def refresh(log: DeltaLog, idCol: String, textCol: String): Long = {
-    val spark = log.spark
-    val snap = log.snapshot
-    validate(snap, idCol, textCol)
-    val existing = entries(log, idCol, textCol)
-      .getOrElse(return build(log, idCol, textCol))
-    // planning from the generation's file-count-sized coverage summary
-    // (no job over the entry relation); everything path-shaped stays
-    // on the driver, the entry rows themselves are filtered by an
-    // exact broadcast semi-join on the STORED spelling (no per-row UDF)
-    val (storedPaths, since, counts) = IncrementalSidecar.storedSummaryFull(
-      spark, indexDir(log, idCol, textCol), existing, Set.empty)
-    // entry-count invariant (log-plane): a covered file whose entry
-    // count contradicts its add's numRecords is demoted — dropped from
-    // the kept set, rescanned, and NEVER a remap source
-    val cov = IncrementalSidecar.coverage(snap, storedPaths,
-      coverDvFiles = false, counts)
-    if (!cov.changed) {
-      // LEGACY generation (pre-count `_coverage`): counts are unknown,
-      // so the entry-count invariant silently skips every covered file.
-      // Republish the SAME entries once — the swap's observed summary
-      // is 3-field, arming the invariant from the next read on. One
-      // bounded entry-relation pass (the rewrite itself), entries
-      // byte-identical, pointer advances exactly one generation.
-      if (counts.isEmpty && storedPaths.nonEmpty) {
-        Sidecar.repairMeta(spark, indexDir(log, idCol, textCol),
-          "lsh", Seq(idCol, textCol))
-        publish(log, indexDir(log, idCol, textCol), idCol, existing)
-      }
-      return snap.version
-    }
-    val validStored = storedPaths.filterNot(cov.invalidStored.toSet)
-    val (groups, toScan) = IncrementalSidecar.remapGroups(log, snap,
-      cov.missing, cov.coveredNorm, validStored, since)
-    val (remapped, fellBack) = IncrementalSidecar.remapRowEntries(
-      spark, snap, existing, idCol, groups,
-      fs => IncrementalSidecar.narrowIdRead(log, snap, fs, idCol), counts)
-    val scanFiles = toScan ++ fellBack
-    val kept = IncrementalSidecar.keepStored(spark, existing, cov.liveStored)
-    val newEntries =
-      if (scanFiles.isEmpty) existing.limit(0)
-      else scanEntries(log, snap, scanFiles, idCol, textCol)
-    Sidecar.repairMeta(spark, indexDir(log, idCol, textCol),
-      "lsh", Seq(idCol, textCol))
-    publish(log, indexDir(log, idCol, textCol), idCol,
-      kept.unionByName(remapped.getOrElse(existing.limit(0)))
-        .unionByName(newEntries))
-    snap.version
-  }
+  def refresh(log: DeltaLog, idCol: String, textCol: String): Long =
+    IncrementalSidecar.refresh(log, kind, Seq(idCol, textCol),
+      validate = validate(_, idCol, textCol),
+      build = () => build(log, idCol, textCol),
+      scan = (snap, _, files) => scanEntries(log, snap, files, idCol, textCol),
+      remap = IncrementalSidecar.remapById(log, kind, idCol),
+      layout = IncrementalSidecar.sortedBy(idCol))
 
   /** Index-backed containment screen: every CROSS pair (batch id,
     * corpus id) with Broder containment ≥ `threshold` — result ≡
@@ -248,10 +167,8 @@ object LshIndex {
       return MinHashLsh.containmentAgainstCorpus(newBatch, snap.read(),
         idCol, textCol, threshold, broadcastKeys, anchorK, maxBucketSize,
         hashedBatch))
-    val (storedPaths, _, counts) = IncrementalSidecar.storedSummaryFull(
-      spark, indexDir(log, idCol, textCol), idx, Set.empty)
-    val (usableStored, liveFiles) = IncrementalSidecar.probeCoverage(
-      snap, storedPaths, coverDvFiles = false, counts)
+    val (usableStored, liveFiles, _) = IncrementalSidecar.probeCoverage(
+      log, snap, kind, Seq(idCol, textCol), idx)
     val covered = IncrementalSidecar.keepStored(spark, idx, usableStored)
       .select(col(idCol), col("hs"))
     def priorHashed: DataFrame =
@@ -301,13 +218,11 @@ object LshIndex {
     val idx = entries(log, idCol, textCol).getOrElse(
       return MinHashLsh.dedupAgainstCorpus(newBatch, snap.read(),
         idCol, textCol, threshold, broadcastKeys, maxBucketSize, hashedBatch))
-    val (storedPaths, _, counts) = IncrementalSidecar.storedSummaryFull(
-      spark, indexDir(log, idCol, textCol), idx, Set.empty)
     // live side: active files the index cannot serve — not yet
     // indexed, re-incarnated with a DV, entry-count invariant failed,
     // or index entries gone stale
-    val (usableStored, liveFiles) = IncrementalSidecar.probeCoverage(
-      snap, storedPaths, coverDvFiles = false, counts)
+    val (usableStored, liveFiles, counts) = IncrementalSidecar.probeCoverage(
+      log, snap, kind, Seq(idCol, textCol), idx)
     MinHashLsh.dedupAgainstPrior(newBatch, idCol, textCol, threshold,
       broadcastKeys, maxBucketSize,
       newKeys => {

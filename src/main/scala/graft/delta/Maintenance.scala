@@ -1563,10 +1563,7 @@ object Maintenance {
     val snap = log.snapshot
     // stats cover DATA columns only (partition values live in the log);
     // file columns use physical names under column mapping
-    val partPhys = snap.metadata.partitionColumns.map(snap.physicalNameOf).toSet
-    val dataSchema = org.apache.spark.sql.types.StructType(
-      snap.physicalSchema.filterNot(f => partPhys.contains(f.name)))
-    val leaves = TransactionWriter.statLeaves(dataSchema)
+    val leaves = TransactionWriter.statLeaves(snap.physicalDataSchema)
     // needy = stats absent, OR present but missing some stat-eligible
     // leaf (the cap-limited common case: dataSkippingNumIndexedCols
     // covered only a prefix). Empty files are complete by definition.
@@ -1590,7 +1587,7 @@ object Maintenance {
         Seq(min(col(p)).as(s"__min_$i"), max(col(p)).as(s"__max_$i"),
           sum(col(p).isNull.cast("long")).as(s"__nc_$i"))
       }
-    val rows = log.spark.read.schema(dataSchema)
+    val rows = log.spark.read.schema(snap.physicalDataSchema)
       .parquet(needy.map(snap.absolutePath): _*)
       .groupBy(input_file_name().as("__file"))
       .agg(aggs.head, aggs.tail: _*)

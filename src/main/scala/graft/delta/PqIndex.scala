@@ -70,13 +70,19 @@ object PqIndex {
     * fixed m) improves on axis-skewed corpora. */
   private val PermMarker = "__perm"
 
+  /** One entry per row (no duplicate-id collapse, unlike IVF's grouped
+    * assignment): entry counts must equal `numRecords`. */
+  private[delta] val kind = IncrementalSidecar.Kind("ivfpq",
+    markers = Seq(CoarseMarker, BooksMarker, PermMarker))(
+    { case (log, Seq(id, vec), defer) =>
+      refresh(log, id, vec, deferRebuild = defer) })
+
   def indexDir(log: DeltaLog, idCol: String, vecCol: String): String =
-    new org.apache.hadoop.fs.Path(
-      log.rootPath, s"_graft_index/ivfpq_${idCol}_$vecCol").toString
+    kind.indexDir(log, Seq(idCol, vecCol))
 
   /** The live sidecar relation, None when no index is built. */
   def entries(log: DeltaLog, idCol: String, vecCol: String): Option[DataFrame] =
-    Sidecar.read(log.spark, indexDir(log, idCol, vecCol))
+    kind.entries(log, Seq(idCol, vecCol))
 
   /** The persisted quantizers in [[Pq.trainCodebooks]]'s shape:
     * (coarse m=1 book, PQ books). */
@@ -112,33 +118,6 @@ object PqIndex {
     perm.map(p => rows.withColumn(vecCol, Pq.permute(col(vecCol), p)))
       .getOrElse(rows)
 
-  private def validate(snap: Snapshot, idCol: String, vecCol: String): Unit =
-    Seq(idCol, vecCol).foreach { c =>
-      require(snap.schema.fieldNames.contains(c),
-        s"column $c not in table schema " +
-          snap.schema.fieldNames.mkString("[", ", ", "]"))
-      require(!snap.metadata.partitionColumns.contains(c),
-        s"$c is a partition column — the index scans data files directly")
-    }
-
-  private def coverableFiles(snap: Snapshot): Seq[AddFile] =
-    IncrementalSidecar.coverableFiles(snap, coverDvFiles = false)
-
-  /** Raw (file_path, id, v) rows of `files` — physical parquet read
-    * with file_path bound BEFORE any shuffle. */
-  private def rawRows(log: DeltaLog, snap: Snapshot,
-      files: Seq[AddFile], idCol: String, vecCol: String): DataFrame = {
-    val physId = snap.physicalNameOf(idCol)
-    val physVec = snap.physicalNameOf(vecCol)
-    val partPhys = snap.metadata.partitionColumns.map(snap.physicalNameOf).toSet
-    val dataSchema = org.apache.spark.sql.types.StructType(
-      snap.physicalSchema.filterNot(f => partPhys.contains(f.name)))
-    log.spark.read.schema(dataSchema)
-      .parquet(files.map(snap.absolutePath): _*)
-      .select(input_file_name().as("file_path"),
-        col(physId).as(idCol), col(physVec).as(vecCol))
-  }
-
   /** Per-row (cell, codes, qerr) under the given quantizers — the
     * EXACT expressions of [[Pq.ivfPqTopK]]'s corpus pass (round-4
     * squared-L2, lowest-cid ties), plus the reconstruction error the
@@ -171,7 +150,9 @@ object PqIndex {
       books: Seq[(Int, Long, Array[Double])],
       perm: Option[Seq[Int]]): DataFrame =
     encodeRows(
-      maybePermute(rawRows(log, snap, files, idCol, vecCol), vecCol, perm),
+      maybePermute(
+        IncrementalSidecar.physicalRead(log, snap, files, Seq(idCol, vecCol)),
+        vecCol, perm),
       vecCol, coarse, books)
       .select(col("file_path"), col(idCol), col("cell"), col("codes"),
         col("qerr"),
@@ -201,17 +182,14 @@ object PqIndex {
   /** The inverted-list layout: cell-range-partitioned + cell-sorted so
     * a probe's pushed `cell IN (...)` prunes row groups; the quantizer
     * rows (null cell) sort into the first partition, noise-free. */
-  private def publish(log: DeltaLog, dir: String, entries: DataFrame): Unit =
-    Sidecar.swapIn(log.spark, dir,
-      entries.repartitionByRange(
-        math.max(1, log.spark.sparkContext.defaultParallelism / 4),
-        col("cell"))
-        .sortWithinPartitions("cell"))
+  private val layout: DataFrame => DataFrame =
+    IncrementalSidecar.sortedBy("cell")
 
   /** Train both quantizers (deterministic md5-anchored k-means,
     * [[Pq.trainCodebooks]]) on the current corpus and encode every
-    * coverable file. Returns the indexed version. */
-  /** `rotate = true` trains an OPQ-surrogate coordinate permutation
+    * coverable file. Returns the indexed version.
+    *
+    * `rotate = true` trains an OPQ-surrogate coordinate permutation
     * first ([[Pq.trainPermutation]] — one aggregation pass) and builds
     * the whole index in permuted space: quantizers train on permuted
     * vectors, entries store permuted-space codes, the permutation
@@ -221,147 +199,73 @@ object PqIndex {
     * costs one extra array projection per encoded/queried row. */
   def build(log: DeltaLog, idCol: String, vecCol: String,
       kCoarse: Int = 8, m: Int = 4, k: Int = 16, iterations: Int = 2,
-      rotate: Boolean = false): Long = {
-    val snap = log.snapshot
-    validate(snap, idCol, vecCol)
-    val files = coverableFiles(snap)
-    if (files.isEmpty) return snap.version
-    val corpus = snap.read()
-    val perm =
-      if (rotate) Some(Pq.trainPermutation(corpus, vecCol, m))
-      else None
-    val trainCorpus = maybePermute(corpus, vecCol, perm)
-    // both quantizers in ONE shared job chain (identical results to
-    // two trainCodebooks calls — the training is job-overhead-bound)
-    val Seq(coarse, books) = Pq.trainCodebooksMulti(trainCorpus, idCol, vecCol,
-      Seq((1, kCoarse), (m, k)), iterations = iterations)
-    // build params persisted so a gauge-triggered retrain reuses THIS
-    // build's knobs (not the signature defaults)
-    Sidecar.writeMeta(log.spark, indexDir(log, idCol, vecCol),
-      "ivfpq", Seq(idCol, vecCol),
+      rotate: Boolean = false): Long =
+    IncrementalSidecar.build(log, kind, Seq(idCol, vecCol),
+      IncrementalSidecar.validate(_, Seq(idCol, vecCol)), layout,
       Map("kCoarse" -> kCoarse.toString, "m" -> m.toString,
         "k" -> k.toString, "iterations" -> iterations.toString,
-        "rotate" -> (if (rotate) "1" else "0")))
-    publish(log, indexDir(log, idCol, vecCol),
+        "rotate" -> (if (rotate) "1" else "0"))) { (snap, files) =>
+      val corpus = snap.read()
+      val perm =
+        if (rotate) Some(Pq.trainPermutation(corpus, vecCol, m))
+        else None
+      val trainCorpus = maybePermute(corpus, vecCol, perm)
+      // both quantizers in ONE shared job chain (identical results to
+      // two trainCodebooks calls — the training is job-overhead-bound)
+      val Seq(coarse, books) = Pq.trainCodebooksMulti(trainCorpus, idCol,
+        vecCol, Seq((1, kCoarse), (m, k)), iterations = iterations)
       quantizerRows(log, snap, idCol, coarse, books, snap.version, perm)
         .unionByName(
-          scanEntries(log, snap, files, idCol, vecCol, coarse, books, perm)))
-    snap.version
-  }
+          scanEntries(log, snap, files, idCol, vecCol, coarse, books, perm))
+    }
 
-  /** Incrementally extend the index: encode ONLY uncovered coverable
-    * files under the PERSISTED quantizers, keep surviving entries
-    * verbatim, drop entries of departed files. Idle refresh publishes
-    * nothing. Routes to a full retraining [[build]] when the drift
-    * gauge trips (scaladoc above), reusing the ORIGINAL build's
-    * (kCoarse, m, k, iterations) from the sidecar `_meta` — unless
-    * `deferRebuild` (the write-path-hook posture), which logs the
-    * drift loudly and takes the incremental path so the hook keeps its
-    * O(uncovered files) contract; an explicit user REFRESH picks the
-    * retrain up. Returns the indexed version. */
+  /** Incrementally extend the index ([[IncrementalSidecar.refresh]]):
+    * encode ONLY uncovered coverable files under the PERSISTED
+    * quantizers, keep surviving entries verbatim, drop entries of
+    * departed files; compaction rewrites carry (cell, codes, qerr)
+    * verbatim via a narrow id read, so the drift gauge sees only
+    * genuinely-new rows. Idle refresh publishes nothing. Routes to a
+    * full retraining [[build]] when the drift gauge trips (scaladoc
+    * above; a negative `driftThreshold` is refused), reusing the
+    * ORIGINAL build's (kCoarse, m, k, iterations, rotate) from the
+    * sidecar `_meta` — unless `deferRebuild` (the write-path-hook
+    * posture), which logs the drift loudly and takes the incremental
+    * path; an explicit user REFRESH picks the retrain up. Returns the
+    * indexed version. */
   def refresh(log: DeltaLog, idCol: String, vecCol: String,
       driftThreshold: Double = 1.0,
-      deferRebuild: Boolean = false): Long = {
-    val spark = log.spark
-    val snap = log.snapshot
-    validate(snap, idCol, vecCol)
-    val idx = entries(log, idCol, vecCol).getOrElse(
-      return build(log, idCol, vecCol))
-    val markers = Set(CoarseMarker, BooksMarker, PermMarker)
-    val dataRows = idx.where(!col("file_path").isin(markers.toSeq: _*))
-    val (storedRaw, since, counts) = IncrementalSidecar.storedSummaryFull(
-      spark, indexDir(log, idCol, vecCol), idx, markers)
-    // countsExact = true: PQ encodes one entry PER ROW (no duplicate
-    // collapse — unlike IVF's grouped assignment), so strict equality
-    // against numRecords is the correct, stronger invariant
-    val cov = IncrementalSidecar.coverage(snap, storedRaw,
-      coverDvFiles = false, counts)
-    if (!cov.changed) {
-      // legacy generation (pre-count `_coverage`): republish verbatim
-      // once so the observed 3-field summary arms the entry-count
-      // invariant (see LshIndex.refresh for the full rationale)
-      if (counts.isEmpty && storedRaw.nonEmpty) {
-        Sidecar.repairMeta(spark, indexDir(log, idCol, vecCol),
-          "ivfpq", Seq(idCol, vecCol))
-        publish(log, indexDir(log, idCol, vecCol), idx)
-      }
-      return snap.version
-    }
-    val validStored = storedRaw.filterNot(cov.invalidStored.toSet)
-    // compaction remap: dataChange=false rewrites carry (cell, codes,
-    // qerr) verbatim via a narrow id read — no re-encoding, and the
-    // drift gauge sees only genuinely-new rows
-    val (groups, toScan) = IncrementalSidecar.remapGroups(log, snap,
-      cov.missing, cov.coveredNorm, validStored, since)
-    val (remapped, fellBack) = IncrementalSidecar.remapRowEntries(
-      spark, snap, dataRows, idCol, groups,
-      fs => IncrementalSidecar.narrowIdRead(log, snap, fs, idCol), counts)
-    val missing = toScan ++ fellBack
-    import spark.implicits._
-    val kept = idx.join(
-      broadcast((markers.toSeq ++ cov.liveStored).toDF("file_path")),
-      Seq("file_path"), "left_semi")
-    val newEntries =
-      if (missing.isEmpty) idx.limit(0)
-      else {
+      deferRebuild: Boolean = false): Long =
+    IncrementalSidecar.refresh(log, kind, Seq(idCol, vecCol),
+      validate = IncrementalSidecar.validate(_, Seq(idCol, vecCol)),
+      build = () => build(log, idCol, vecCol),
+      scan = (snap, idx, files) => {
         val (coarse, books) = storedQuantizers(idx)
-        val perm = storedPerm(idx)
-        // materialize (ingest-sized) so the drift agg and the publish
-        // share one encode pass over the new files
-        val e = scanEntries(log, snap, missing, idCol, vecCol, coarse, books,
-          perm).localCheckpoint()
-        require(driftThreshold >= 0.0,
-          s"driftThreshold must be >= 0, got $driftThreshold")
-        val newAvg = Option(e.agg(avg("qerr")).head().get(0))
-          .map(_.asInstanceOf[Double])
-        val oldAvg = Option(
-          idx.where(!col("file_path").isin(markers.toSeq: _*))
-            .agg(avg("qerr")).head().get(0))
-          .map(_.asInstanceOf[Double])
-        (oldAvg, newAvg) match {
-          case (Some(o), Some(nw)) if nw > o * (1.0 + driftThreshold) =>
-            if (deferRebuild) {
-              org.slf4j.LoggerFactory.getLogger(getClass).warn(
-                s"IVF-PQ index on ${log.tablePath} ($idCol,$vecCol): " +
-                  f"reconstruction-error drift (old mean $o%.4f, new " +
-                  f"$nw%.4f, threshold ${driftThreshold}%.2f rel) — retrain " +
-                  "deferred to an explicit REFRESH; ADC quality on new " +
-                  "data may degrade")
-            } else {
-              // the frozen codebooks no longer fit the incoming data —
-              // retrain both quantizers on the whole corpus with the
-              // ORIGINAL build's params from _meta (stored quantizer
-              // shapes are the fallback)
-              val params = Sidecar
-                .readMetaFull(spark, indexDir(log, idCol, vecCol))
-                .map(_._3).getOrElse(Map.empty)
-              val m = params.get("m").flatMap(_.toIntOption)
-                .getOrElse(books.map(_._1).max + 1)
-              return build(log, idCol, vecCol,
-                kCoarse = params.get("kCoarse").flatMap(_.toIntOption)
-                  .getOrElse(coarse.size),
-                m = m,
-                k = params.get("k").flatMap(_.toIntOption)
-                  .getOrElse(books.size / m),
-                iterations = params.get("iterations")
-                  .flatMap(_.toIntOption).getOrElse(2),
-                // a rotated index retrains rotated (fresh permutation
-                // for the drifted distribution); fallback: the stored
-                // perm's presence
-                rotate = params.get("rotate")
-                  .map(_ == "1").getOrElse(perm.nonEmpty))
-            }
-          case _ => ()
-        }
-        e
-      }
-    Sidecar.repairMeta(spark, indexDir(log, idCol, vecCol),
-      "ivfpq", Seq(idCol, vecCol))
-    publish(log, indexDir(log, idCol, vecCol),
-      kept.unionByName(remapped.getOrElse(idx.limit(0)))
-        .unionByName(newEntries))
-    snap.version
-  }
+        scanEntries(log, snap, files, idCol, vecCol, coarse, books,
+          storedPerm(idx))
+      },
+      remap = IncrementalSidecar.remapById(log, kind, idCol),
+      layout = layout,
+      drift = Some(IncrementalSidecar.Drift("qerr", driftThreshold,
+        (oldMean, newMean) => newMean > oldMean * (1.0 + driftThreshold),
+        deferRebuild,
+        (idx, params) => {
+          // stored quantizer shapes are the fallback for a param-less
+          // `_meta`; a rotated index retrains rotated (fresh
+          // permutation for the drifted distribution)
+          lazy val (coarse, books) = storedQuantizers(idx)
+          val m = params.get("m").flatMap(_.toIntOption)
+            .getOrElse(books.map(_._1).max + 1)
+          build(log, idCol, vecCol,
+            kCoarse = params.get("kCoarse").flatMap(_.toIntOption)
+              .getOrElse(coarse.size),
+            m = m,
+            k = params.get("k").flatMap(_.toIntOption)
+              .getOrElse(books.size / m),
+            iterations = params.get("iterations")
+              .flatMap(_.toIntOption).getOrElse(2),
+            rotate = params.get("rotate")
+              .map(_ == "1").getOrElse(storedPerm(idx).nonEmpty))
+        })))
 
   /** ANN top-k THROUGH the index: per query, rank its nprobe coarse
     * cells ([[Pq.probeCells]] against the persisted coarse book), read
@@ -389,7 +293,7 @@ object PqIndex {
       rerankTopC: Int = 0): DataFrame = {
     val spark = log.spark
     val snap = log.snapshot
-    validate(snap, idCol, vecCol)
+    IncrementalSidecar.validate(snap, Seq(idCol, vecCol))
     val idx = entries(log, idCol, vecCol).getOrElse(
       throw new IllegalStateException(
         s"no IVF-PQ index on ${log.tablePath} for ($idCol, $vecCol): run " +
@@ -397,7 +301,6 @@ object PqIndex {
     val (coarse, books) = storedQuantizers(idx)
     val perm = storedPerm(idx)
     val m = books.map(_._1).max + 1
-    val markers = Set(CoarseMarker, BooksMarker, PermMarker)
     // query side: probe cells + raw-vector norms ([[Pq.ivfPqTopK]]'s
     // q). A rotated index stores everything in permuted space, so the
     // queries permute ONCE here — distances are unchanged as
@@ -415,10 +318,8 @@ object PqIndex {
       .collect().map(_.getInt(0)).toSeq
     // covered entries of still-active DV-free files only — planned
     // from the generation's coverage summary, not an entry-relation job
-    val (storedRaw, _, counts) = IncrementalSidecar.storedSummaryFull(
-      spark, indexDir(log, idCol, vecCol), idx, markers)
-    val (usable, liveFiles) = IncrementalSidecar.probeCoverage(
-      snap, storedRaw, coverDvFiles = false, counts)
+    val (usable, liveFiles, _) = IncrementalSidecar.probeCoverage(
+      log, snap, kind, Seq(idCol, vecCol), idx)
     import spark.implicits._
     val recon = (0 until m).map { j =>
       element_at(Pq.bookLit(books, j), element_at(col("codes"), j + 1))

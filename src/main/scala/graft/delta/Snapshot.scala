@@ -196,6 +196,14 @@ class Snapshot(
   def physicalSchema: StructType =
     toPhysical(schema, columnMappingMode == "id").asInstanceOf[StructType]
 
+  /** [[physicalSchema]] minus the partition columns: the schema a raw
+    * parquet read of this table's data files takes (partition values
+    * live in the log, not in the files). */
+  lazy val physicalDataSchema: StructType = {
+    val partPhys = metadata.partitionColumns.map(physicalNameOf).toSet
+    StructType(physicalSchema.filterNot(f => partPhys.contains(f.name)))
+  }
+
   /** Physical name of a top-level (e.g. partition) column. */
   def physicalNameOf(logicalCol: String): String = physicalName(schema(logicalCol))
 

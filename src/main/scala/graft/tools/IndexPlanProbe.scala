@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   *
   * A/B at growing corpus sizes, same file count:
   *  - `summary` — the production path ([[graft.delta.IncrementalSidecar
-  *    .storedSummary]] via `_coverage`): must stay ~FLAT as rows grow;
+  *    .storedSummaryFull]] via `_coverage`): must stay ~FLAT as rows grow;
   *  - `cached`  — the second call on the same generation: ~zero;
   *  - `legacy`  — the pre-summary derivation (distinct+max over the
   *    entry relation, forced by deleting `_coverage`): grows with the
@@ -48,10 +48,10 @@ object IndexPlanProbe {
       LshIndex.build(log, "doc_id", "text")
       val idxDir = LshIndex.indexDir(log, "doc_id", "text")
       val idx = LshIndex.entries(log, "doc_id", "text").get
-      val ((sPaths, sVer), tSummary) = t(
-        IncrementalSidecar.storedSummary(spark, idxDir, idx, Set.empty))
+      val ((sPaths, sVer, _), tSummary) = t(
+        IncrementalSidecar.storedSummaryFull(spark, idxDir, idx, Set.empty))
       val (_, tCached) = t(
-        IncrementalSidecar.storedSummary(spark, idxDir, idx, Set.empty))
+        IncrementalSidecar.storedSummaryFull(spark, idxDir, idx, Set.empty))
       // force the legacy derivation: drop the generation's _coverage
       val base = new org.apache.hadoop.fs.Path(idxDir)
       val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -59,8 +59,8 @@ object IndexPlanProbe {
         fs.delete(new org.apache.hadoop.fs.Path(g.getPath, "_coverage"), false)
       }
       graft.delta.Sidecar.invalidateCoverage(spark, idxDir)
-      val ((lPaths, lVer), tLegacy) = t(
-        IncrementalSidecar.storedSummary(spark, idxDir, idx, Set.empty))
+      val ((lPaths, lVer, _), tLegacy) = t(
+        IncrementalSidecar.storedSummaryFull(spark, idxDir, idx, Set.empty))
       if (sPaths.toSet != lPaths.toSet || sVer != lVer) {
         failures += 1
         println(s"FAIL n=$n: summary (${sPaths.size}, $sVer) != " +

@@ -238,6 +238,14 @@ class BloomIndexSpec extends SparkTestBase {
       Seq((10001L, "another_new")).toDF("id", "k"))
     BloomIndex.buildIncremental(DeltaLog.forPath(spark, log.tablePath), "k")
     assert(listing().count(_.startsWith("gen_")) == 2)
+    // an idle refresh publishes nothing: the pointer stays where it was
+    def current() = {
+      val in = fs.open(new org.apache.hadoop.fs.Path(idxDir, "_current"))
+      try scala.io.Source.fromInputStream(in).mkString finally in.close()
+    }
+    val live = current()
+    BloomIndex.buildIncremental(DeltaLog.forPath(spark, log.tablePath), "k")
+    assert(current() == live, "idle refresh must not publish a new generation")
     // a vanished pointer degrades reads to None (probe: full scan)
     fs.delete(new org.apache.hadoop.fs.Path(idxDir, "_current"), false)
     assert(BloomIndex.entries(log, "k").isEmpty)

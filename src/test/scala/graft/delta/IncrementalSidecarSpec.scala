@@ -372,55 +372,74 @@ class IncrementalSidecarSpec extends SparkTestBase {
       "the healed summary must carry the true count again")
   }
 
-  test("legacy 2-field coverage: idle refresh republishes once, arming the invariant") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cov_legacy_")
-      .resolve("t").toString
-    val log = DeltaLog.forPath(spark, dir)
-    def dtext(i: Long): String =
-      s"doc $i " + (0 until 12).map(j => s"tok${i}_$j").mkString(" ")
-    TransactionWriter.overwrite(log,
-      (0L until 30L).map(i => (i, dtext(i))).toDF("id", "text")
-        .repartition(3, col("id")))
-    LshIndex.build(log, "id", "text")
-    val idxDir = LshIndex.indexDir(log, "id", "text")
-    val base = new org.apache.hadoop.fs.Path(idxDir)
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def gen(): String = {
-      val in = fs.open(new org.apache.hadoop.fs.Path(base, "_current"))
-      try scala.io.Source.fromInputStream(in).mkString.trim finally in.close()
+  /** A row-keyed kind under the legacy-summary test: its table rows,
+    * and its build and refresh over columns `cols`. */
+  private case class LegacyCase(label: String, kind: IncrementalSidecar.Kind,
+      cols: Seq[String], rows: Seq[Long] => org.apache.spark.sql.DataFrame,
+      build: DeltaLog => Long, refresh: DeltaLog => Long)
+
+  private def dtext(i: Long): String =
+    s"doc $i " + (0 until 12).map(j => s"tok${i}_$j").mkString(" ")
+
+  Seq(
+    LegacyCase("", LshIndex.kind, Seq("id", "text"),
+      ids => ids.map(i => (i, dtext(i))).toDF("id", "text"),
+      LshIndex.build(_, "id", "text"), LshIndex.refresh(_, "id", "text")),
+    LegacyCase(" (IVF)", IvfIndex.kind, Seq("id", "v"), vecsDf,
+      IvfIndex.build(_, "id", "v", k = 4, iterations = 2),
+      IvfIndex.refresh(_, "id", "v")),
+    LegacyCase(" (IVF-PQ)", PqIndex.kind, Seq("id", "v"), vecsDf,
+      PqIndex.build(_, "id", "v", kCoarse = 4, m = 2, k = 8),
+      PqIndex.refresh(_, "id", "v"))
+  ).foreach { c =>
+    test("legacy 2-field coverage: idle refresh republishes once, arming " +
+        s"the invariant${c.label}") {
+      val dir = java.nio.file.Files.createTempDirectory("graft_cov_legacy_")
+        .resolve("t").toString
+      val log = DeltaLog.forPath(spark, dir)
+      TransactionWriter.overwrite(log,
+        c.rows(0L until 30L).repartition(3, col("id")))
+      c.build(log)
+      val idxDir = c.kind.indexDir(log, c.cols)
+      val base = new org.apache.hadoop.fs.Path(idxDir)
+      val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def gen(): String = {
+        val in = fs.open(new org.apache.hadoop.fs.Path(base, "_current"))
+        try scala.io.Source.fromInputStream(in).mkString.trim finally in.close()
+      }
+      def entries() = c.kind.entries(log, c.cols).get
+        .collect().map(_.toString).sorted.toSeq
+      val entriesBefore = entries()
+      // rewrite the live generation's summary as a pre-r12 2-field file
+      val g0 = gen()
+      val covPath = new org.apache.hadoop.fs.Path(base, s"$g0/_coverage")
+      val legacy = {
+        val in = fs.open(covPath)
+        try scala.io.Source.fromInputStream(in).mkString.split("\n").toSeq
+          .map(l => l.split("\t").take(2).mkString("\t"))
+        finally in.close()
+      }
+      val out = fs.create(covPath, true)
+      try out.write(legacy.mkString("\n").getBytes("UTF-8")) finally out.close()
+      Sidecar.invalidateCoverage(spark, idxDir)
+      // counts unknown: the invariant is dormant
+      val full0 = Sidecar.readCoverageFull(spark, idxDir).get
+      assert(full0.valuesIterator.forall(_._2 == -1L), s"legacy counts: $full0")
+      // idle refresh (no table change): must republish the SAME entries
+      // under a NEW generation whose summary carries counts
+      c.refresh(log)
+      val g1 = gen()
+      assert(g1 != g0, "legacy generation must be republished")
+      val full1 = Sidecar.readCoverageFull(spark, idxDir).get
+      assert(full1.nonEmpty && full1.valuesIterator.forall(_._2 >= 0),
+        s"republished summary must carry counts: $full1")
+      val entriesAfter = entries()
+      assert(entriesAfter == entriesBefore,
+        "republish must carry entries byte-verbatim (no rescan)")
+      // a second idle refresh is a pure no-op: pointer does not move
+      c.refresh(log)
+      assert(gen() == g1, "second idle refresh must not republish again")
     }
-    val entriesBefore = LshIndex.entries(log, "id", "text").get
-      .collect().map(_.toString).sorted.toSeq
-    // rewrite the live generation's summary as a pre-r12 2-field file
-    val g0 = gen()
-    val covPath = new org.apache.hadoop.fs.Path(base, s"$g0/_coverage")
-    val legacy = {
-      val in = fs.open(covPath)
-      try scala.io.Source.fromInputStream(in).mkString.split("\n").toSeq
-        .map(l => l.split("\t").take(2).mkString("\t"))
-      finally in.close()
-    }
-    val out = fs.create(covPath, true)
-    try out.write(legacy.mkString("\n").getBytes("UTF-8")) finally out.close()
-    Sidecar.invalidateCoverage(spark, idxDir)
-    // counts unknown: the invariant is dormant
-    val full0 = Sidecar.readCoverageFull(spark, idxDir).get
-    assert(full0.valuesIterator.forall(_._2 == -1L), s"legacy counts: $full0")
-    // idle refresh (no table change): must republish the SAME entries
-    // under a NEW generation whose summary carries counts
-    LshIndex.refresh(log, "id", "text")
-    val g1 = gen()
-    assert(g1 != g0, "legacy generation must be republished")
-    val full1 = Sidecar.readCoverageFull(spark, idxDir).get
-    assert(full1.nonEmpty && full1.valuesIterator.forall(_._2 >= 0),
-      s"republished summary must carry counts: $full1")
-    val entriesAfter = LshIndex.entries(log, "id", "text").get
-      .collect().map(_.toString).sorted.toSeq
-    assert(entriesAfter == entriesBefore,
-      "republish must carry entries byte-verbatim (no rescan)")
-    // a second idle refresh is a pure no-op: pointer does not move
-    LshIndex.refresh(log, "id", "text")
-    assert(gen() == g1, "second idle refresh must not republish again")
   }
 
   test("transitive chain: OPTIMIZE then re-cluster with no refresh between still remaps") {

@@ -145,6 +145,16 @@ class IvfIndexSpec extends SparkTestBase {
     assert(asSet(viaIdx) == asSet(direct))
   }
 
+  test("a negative driftThreshold is refused, even by an idle refresh") {
+    val log = scratch()
+    IvfIndex.build(log, "vec_id", "embedding", k = 4)
+    val err = intercept[IllegalArgumentException] {
+      IvfIndex.refresh(DeltaLog.forPath(spark, log.tablePath),
+        "vec_id", "embedding", driftThreshold = -1.0)
+    }
+    assert(err.getMessage.contains("driftThreshold"))
+  }
+
   test("search without an index refuses loudly") {
     val log = scratch()
     val err = intercept[IllegalStateException] {

@@ -208,6 +208,16 @@ class PqIndexSpec extends SparkTestBase {
     assert(asSet(viaIdx) == asSet(direct))
   }
 
+  test("a negative driftThreshold is refused, even by an idle refresh") {
+    val log = scratch()
+    PqIndex.build(log, "vec_id", "embedding", kCoarse = 4, m = 4, k = 8)
+    val err = intercept[IllegalArgumentException] {
+      PqIndex.refresh(DeltaLog.forPath(spark, log.tablePath),
+        "vec_id", "embedding", driftThreshold = -1.0)
+    }
+    assert(err.getMessage.contains("driftThreshold"))
+  }
+
   test("search without an index refuses loudly") {
     val log = scratch()
     val err = intercept[IllegalStateException] {
